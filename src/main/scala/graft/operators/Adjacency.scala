@@ -135,8 +135,8 @@ object Adjacency {
       .repartition(numPartitions, col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // static zero-in-degree set: lets pull-topo PageRank REPLACE its
-    // per-superstep vertices-left-join with a shuffle-free union of
+    // static zero-in-degree set: lets pull-topo PageRank's unchecked
+    // supersteps REPLACE a vertices-left-join with a shuffle-free union of
     // constant base ranks (sums already covers every indeg>0 vertex).
     val noIn = verts
       .join(edges.select(col("dst").as("id")).distinct(), Seq("id"),

@@ -3,7 +3,6 @@ package graft.operators
 import graft.plans.SnapshotStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
 /** One superstep's runtime stats (the reference's -statFile rows). */
@@ -30,10 +29,11 @@ final case class PageRankResult(ranks: DataFrame, iterations: Int,
  *
  * Each superstep is one Catalyst-planned job: state (O(V)) shuffles onto the
  * adjacency's stable src-partitioning, contributions partially aggregate
- * map-side before the single O(E)→O(V) shuffle on dst, and the convergence
- * check is an `agg` action. Every `checkpointEvery` supersteps the state is
- * committed to the SnapshotStore and re-read, truncating lineage and making
- * the run resumable mid-iteration.
+ * map-side before the single O(E)→O(V) shuffle on dst; a checked
+ * superstep's dst aggregation also takes one self row per vertex, so it
+ * yields the L1 residual too. Every `checkpointEvery` supersteps the state
+ * is committed to the SnapshotStore and re-read, truncating lineage and
+ * making the run resumable mid-iteration.
  */
 object PageRank {
 
@@ -60,41 +60,47 @@ object PageRank {
       resume: Boolean = false,
       checkEvery: Int = 1): PageRankResult = {
 
-    // capped eager checkpoint: the fused residual join below multiplies
-    // the checkpoint leaf's inherited size estimate by the state's own —
-    // uncapped, the estimate's bit length doubles per iteration and
-    // Catalyst's stats visitor dies in BigInteger arithmetic by ~30
-    // rounds (see GraftPlanBridge)
+    // capped eager checkpoint: the gather join multiplies the checkpoint
+    // leaf's inherited size estimate every superstep (see GraftPlanBridge)
     def ck(df: DataFrame): DataFrame =
       org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
 
-    // tol < 0 → fixed-iteration mode: skip the L1 join entirely.
+    // tol < 0 → fixed-iteration mode: no residual, no self rows.
     val trackResidual = tol >= 0
     val n = adj.numVertices
     val base = (1.0 - alpha) / n
     val metrics = ArrayBuffer.empty[IterMetric]
 
-    // gather: contributions value(u)/nout(u) along out-edges, combined
-    // with map-side partial aggregation before the dst shuffle. The new
-    // value does not depend on the old, so instead of a vertices-left-join
-    // the (static) zero-in-degree vertices are union'd in with the bare
-    // base rank — one shuffle join + one agg per superstep, nothing else.
-    def superstep(st: DataFrame): DataFrame = {
-      val sums = adj.blocks
-        .join(st, adj.blocks("src") === st("id"))
-        .select(explode(col("dsts")).as("id"),
-          (col("value") / col("deg")).as("c"))
-        .groupBy("id").agg(
-          (lit(base) + lit(alpha) * sum(col("c"))).as("value"))
-      sums.unionAll(
-        adj.noInbound.select(col("id"), lit(base).as("value")))
-    }
+    // contributions value(u)/nout(u) along out-edges, partially
+    // aggregated map-side before the one dst shuffle
+    def gather(st: DataFrame): DataFrame = adj.blocks
+      .join(st, adj.blocks("src") === st("id"))
+      .select(explode(col("dsts")).as("id"),
+        (col("value") / col("deg")).as("c"))
+    val rank = (lit(base) + lit(alpha) * sum(col("c"))).as("value")
 
+    // unchecked step (fixed mode, or inside a checkEvery chain): the
+    // static zero-in-degree base ranks are union'd in AFTER the
+    // aggregation, so they shuffle nothing; the state is referenced once
+    def superstep(st: DataFrame): DataFrame = gather(st)
+      .groupBy("id").agg(rank)
+      .unionAll(adj.noInbound.select(col("id"), lit(base).as("value")))
+
+    // checked step: one self row per vertex (c = 0.0, prev = old rank), so
+    // the same aggregation yields the zero-in-degree base ranks and the L1
+    // residual; nothing else is joined
+    def checkedSuperstep(st: DataFrame): DataFrame = gather(st)
+      .select(col("*"), lit(null).cast("double").as("prev"))
+      .unionAll(
+        st.select(col("id"), lit(0.0).as("c"), col("value").as("prev")))
+      .groupBy("id").agg(rank, max(col("prev")).as("prev"))
+
+    // the start state is a leaf already (the cached vertex table or the
+    // snapshot's parquet files), so it is not checkpointed
     val resumed = if (resume) store.flatMap(_.latest("pagerank_topo")) else None
     var iter = resumed.map(_._1).getOrElse(0)
     var state = resumed.map(_._2).getOrElse(
       adj.vertices.select(col("id"), lit(1.0 / n).as("value")))
-      .localCheckpoint(true)
 
     var converged = false
     while (!converged && iter < maxIter) {
@@ -109,34 +115,19 @@ object PageRank {
       val chunk = if (trackResidual) checkEvery else math.max(checkEvery, 8)
       val steps = math.min(chunk, maxIter - iter)
       // localCheckpoint truncates the logical plan at every
-      // materialization — without it the analyzed plan embeds the
-      // previous state twice (gather + residual joins) and grows 2^k
-      // (OOMs by iteration ~15). Durability across executor loss comes
-      // from the SnapshotStore commits, not this non-reliable checkpoint.
-      var l1 = Double.NaN
-      var next: DataFrame = null
-      if (trackResidual) {
-        var cur = state
-        for (_ <- 1 until steps) cur = superstep(cur)
-        val penult = if (steps == 1) state else ck(cur)
-        // fold the L1 residual into the materializing pass: the join
-        // against the penultimate state rides the same job and the sum
-        // comes out of Dataset.observe — one action per check instead of
-        // a checkpoint pass plus a separate re-read aggregate.
-        val obs = org.apache.spark.sql.Observation(s"pr_topo_$iter")
-        next = ck(superstep(penult)
-          .join(penult.select(col("id"), col("value").as("prev")), "id")
-          .observe(obs, sum(abs(col("value") - col("prev"))).as("l1"))
-          .select(col("id"), col("value")))
-        l1 = obs.get.get("l1") match {
-          case Some(d: Double) => d
-          case _               => Double.NaN
+      // materialization. Durability across executor loss comes from the
+      // SnapshotStore commits, not this non-reliable checkpoint.
+      val chain = (1 until steps).foldLeft(state)((st, _) => superstep(st))
+      var (next, l1) =
+        if (!trackResidual) (ck(superstep(chain)), Double.NaN)
+        else {
+          // the checked step reads its input twice (gather, self rows), so
+          // the input is materialized; the residual rides the step's action
+          val obs = org.apache.spark.sql.Observation()
+          (ck(checkedSuperstep(if (steps == 1) chain else ck(chain))
+            .observe(obs, sum(abs(col("value") - col("prev"))).as("l1"))
+            .select(col("id"), col("value"))), observed(obs, "l1", 0.0))
         }
-      } else {
-        var cur = state
-        for (_ <- 1 to steps) cur = superstep(cur)
-        next = ck(cur)
-      }
 
       iter += steps
       val ms = (System.nanoTime() - t0) / 1000000
@@ -152,6 +143,13 @@ object PageRank {
     }
     PageRankResult(state, iter, converged, metrics.toSeq)
   }
+
+  /** An observed metric: a missing key throws rather than pass as
+    * converged or not; a null sum (empty input) reads as `zero`. */
+  private def observed[T](obs: org.apache.spark.sql.Observation,
+      key: String, zero: T): T =
+    Option(obs.get.getOrElse(key, throw new IllegalStateException(
+      s"observed metric '$key' missing"))).fold(zero)(_.asInstanceOf[T])
 
   /** Exactly `k` pull-topo iterations, no convergence check — the
     * deterministic kernel used by the SQL-oracle correctness queries. */
@@ -297,7 +295,7 @@ object PageRank {
         .groupBy("id").agg(sum(col("d")).as("dsum"))
 
       val active = col("residual") > tol
-      val obs = org.apache.spark.sql.Observation(s"pr_res_$iter")
+      val obs = org.apache.spark.sql.Observation()
       var next = state
         .join(deltas, Seq("id"), "left")
         .select(
@@ -313,9 +311,8 @@ object PageRank {
           sum(col("residual")).as("res_l1"))
         .localCheckpoint(true)
 
-      val m = obs.get
-      nextAccum = m.get("accum") match { case Some(l: Long) => l; case _ => 0L }
-      val l1 = m.get("res_l1") match { case Some(d: Double) => d; case _ => 0.0 }
+      nextAccum = observed(obs, "accum", 0L)
+      val l1 = observed(obs, "res_l1", 0.0)
       iter += 1
       val ms = (System.nanoTime() - t0) / 1000000
       metrics += IterMetric(iter, l1, adj.numEdges, ms)

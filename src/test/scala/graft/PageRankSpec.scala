@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{GraphOps, PageRank}
+import graft.operators.{Adjacency, GraphOps, PageRank}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +24,58 @@ class PageRankSpec extends AnyFunSuite {
     // per-iteration metrics recorded (the -statFile analog)
     assert(res.metrics.length == res.iterations)
     assert(res.metrics.forall(_.edgesProcessed == web.adjacency.numEdges))
+  }
+
+  // 0 and 7 have no in-edges, 5 and 8 no out-edges, 6 and 9 no edges at
+  // all (present only through explicitVertices); 0 is a hub that spans
+  // several blocks at blockSize 2.
+  private val oddEdges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 5L),
+    (1L, 2L), (2L, 3L), (3L, 1L), (3L, 5L), (4L, 2L), (2L, 4L), (7L, 4L),
+    (7L, 8L))
+  private val oddIds = (0L to 9L).toArray
+  private lazy val oddAdj = {
+    import spark.implicits._
+    Adjacency.build(df(oddEdges), blockSize = 2, numPartitions = 3,
+      explicitVertices = Some(oddIds.toSeq.toDF("id")))
+  }
+  private def oracleAfter(k: Int): Map[Long, Double] =
+    TestOracles.pagerankTopo(oddEdges.toArray, oddIds, tol = -1.0,
+      maxIter = k)._1
+
+  test("each superstep's residual is the oracle's consecutive-superstep L1") {
+    val steps = 12
+    val oracleL1 = (1 to steps).map { k =>
+      val (a, b) = (oracleAfter(k - 1), oracleAfter(k))
+      oddIds.map(id => math.abs(b(id) - a(id))).sum
+    }
+    for (checkEvery <- Seq(1, 3)) {
+      val res = PageRank.runTopo(oddAdj, tol = 0.0, maxIter = steps,
+        checkEvery = checkEvery)
+      assert(res.metrics.map(_.superstep) ==
+        (checkEvery to steps by checkEvery))
+      res.metrics.foreach { m =>
+        val want = oracleL1(m.superstep - 1)
+        assert(math.abs(m.l1Residual - want) <= 1e-12 * want,
+          s"checkEvery $checkEvery superstep ${m.superstep}: " +
+            s"${m.l1Residual} vs oracle $want")
+      }
+      val got = ranksOf(res.ranks)
+      val want = oracleAfter(steps)
+      assert(got.keySet == oddIds.toSet)
+      oddIds.foreach(id => assert(math.abs(got(id) - want(id)) <= 1e-15,
+        s"vertex $id: ${got(id)} vs ${want(id)}"))
+    }
+  }
+
+  test("fixed mode across the 8-step chain boundary equals the oracle") {
+    val got = ranksOf(PageRank.topoFixed(oddAdj, 10))
+    val want = oracleAfter(10)
+    assert(got.keySet == oddIds.toSet)
+    oddIds.foreach(id => assert(math.abs(got(id) - want(id)) <= 1e-15,
+      s"vertex $id: ${got(id)} vs ${want(id)}"))
+    // zero-in-degree and isolated vertices sit at the bare base rank
+    val base = (1.0 - PageRank.Alpha) / oddIds.length
+    Seq(0L, 6L, 7L, 9L).foreach(id => assert(got(id) == base))
   }
 
   test("dangling mass is lost (reference semantics): sum(rank) < 1") {

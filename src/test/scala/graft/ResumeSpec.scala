@@ -4,6 +4,7 @@ import graft.operators.{ConnectedComponents, PageRank}
 import graft.plans.SnapshotStore
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Checkpoint/resume semantics (north rule: resumable mid-iteration). */
 class ResumeSpec extends AnyFunSuite {
@@ -91,5 +92,31 @@ class ResumeSpec extends AnyFunSuite {
     val manifest = Files.list(java.nio.file.Paths.get(store.root, "snapshots"))
       .iterator().next()
     assert(Files.readString(manifest).contains("partition_lineage"))
+
+    // lineage: one entry per written part file, rows summing to the state
+    val state = spark.range(0, 50, 1, 3).selectExpr("id", "id * 0.5 AS value")
+    store.commitState("x", 9, state)
+    val lineage = Files.readString(
+      java.nio.file.Paths.get(store.root, "snapshots", "x-000000009.json"))
+    val rows = """"rows":(\d+)""".r.findAllMatchIn(lineage)
+      .map(_.group(1).toLong).toSeq
+    val parts = Files.list(java.nio.file.Paths.get(store.root, "data", "x",
+      "step=9")).iterator().asScala.map(_.getFileName.toString)
+      .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts == 3)
+    assert(rows.length == parts, lineage)
+    assert(rows.sum == 50L, lineage)
+  }
+
+  test("latest matches the algo name exactly, not a prefix") {
+    import spark.implicits._
+    val store = new SnapshotStore(tmp(), spark)
+    store.commitState("x", 3, Seq((1L, 0.3)).toDF("id", "value"))
+    store.commitState("x-y", 12, Seq((1L, 1.2)).toDF("id", "value"))
+    store.commitState("x-y", 4, Seq((1L, 0.4)).toDF("id", "value"))
+    assert(store.latest("x").map(_._1).contains(3))
+    assert(store.latest("x-y").map(_._1).contains(12))
+    assert(store.latest("x").get._2.collect().head.getDouble(1) == 0.3)
+    assert(store.latest("y").isEmpty)
   }
 }

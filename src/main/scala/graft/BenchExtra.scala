@@ -3,18 +3,16 @@ package graft
 import org.apache.spark.sql.execution.ExplainMode
 
 /**
- * Round-6 measurement harness (guide §1: measure first; §1.4 noop sink;
- * §1.5 labelled jobs). NOT part of the driver contract — `Bench.scala`
- * is the frozen artifact surface; this main exists so individual queries
- * can be timed / re-timed / explained in isolation while optimizing,
- * with the same session config and the same `.count()` action as
- * `BenchSuite`.
+ * Times or explains a subset of the driver queries. Not part of the
+ * driver contract — `Bench.scala` is the artifact surface (the whole
+ * suite is `BenchSuite`); this main exists so individual queries can be
+ * timed / re-timed / explained in isolation while optimizing, with the
+ * same session config and the same `.count()` action as `BenchSuite`.
  *
  * Usage (all via sbt, env like the driver):
  *   runMain graft.BenchExtra time <query> [query...]   — per-query secs
  *   runMain graft.BenchExtra explain <tag> <query...>  — dump
  *       .explain("formatted") to plans/r06/<query>_<tag>.txt
- *   runMain graft.BenchExtra suite                     — whole suite once
  */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
@@ -42,11 +40,6 @@ object BenchExtra {
         val qs = if (names.isEmpty) SparkEntry.queries.keys.toList.sorted
           else names
         qs.foreach { n => println(f"EXTRA_Q $n ${timeOne(n)}%.2f") }
-      case "suite" :: _ =>
-        val all = SparkEntry.queries.keys.toList.sorted
-        val res = all.map(n => n -> timeOne(n))
-        res.foreach { case (n, s) => println(f"EXTRA_Q $n $s%.2f") }
-        println(f"EXTRA_TOTAL ${res.map(_._2).sum}%.1f")
       case "explain" :: tag :: names =>
         val dir = new java.io.File("/root/repo/plans/r06")
         dir.mkdirs()

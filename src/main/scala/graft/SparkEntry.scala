@@ -1,5 +1,6 @@
 package graft
 
+import graft.exec.Materialize
 import graft.operators._
 import graft.sources.TpchGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -80,8 +81,8 @@ object SparkEntry {
       // intersection form over the shared out-lists: the Σ outdeg⁺²
       // wedge stream of Triangles.listing never crosses an exchange.
       // One hash exchange on the triple before the checkpoint — NOT
-      // for balance (the inherited layout is even, max/min 1.007 —
-      // Dev trilayout) but for TASK COUNT: the broadcast-joined
+      // for balance (the inherited layout is even, max/min 1.007 as
+      // measured) but for TASK COUNT: the broadcast-joined
       // explode inherits the AQE-coalesced edge frame's 8 partitions,
       // so every consumer's first stage ran 8 tasks on 32 cores; the
       // old wedge join's exchange gave consumers full-width scans.
@@ -639,16 +640,12 @@ object SparkEntry {
         .orderBy("user_id", "session_start_ms")),
   )
 
-  // The ANN corpus bucket index is query-independent — built once per
-  // (dir, bits, tables) and PERSISTED TO DISK (the offline IVF-index
-  // analog), so fresh processes (each bench run is a new JVM) pay only
-  // the probe joins, not the 4-table corpus bucketing.
+  // The ANN corpus bucket index is query-independent: built once per
+  // (session, dir) and materialized, so ann_topk pays for it inside its
+  // own query and nothing outlives the process.
   private def annIndex(s: SparkSession, d: String): DataFrame =
-    dfCache.getOrElseUpdate(key(s, d, "annidx"), {
-      val path = "/root/repo/target/graft-annidx/" +
-        d.replaceAll("[^a-zA-Z0-9.]", "_") + "_b4t4s42"
-      Similarity.loadOrBuildIndex(emb(s, d), path, bits = 4, tables = 4)
-    })
+    dfCache.getOrElseUpdate(key(s, d, "annidx"),
+      Materialize(Similarity.lshBucketsMulti(emb(s, d), bits = 4, tables = 4)))
 
   private def docs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/documents.parquet")

@@ -75,10 +75,6 @@ object Hashes {
     else toks.sliding(n).map(_.mkString(" ")).toSeq.distinct
   }
 
-  /** MinHash signature over the distinct shingles. */
-  def minhashSig(text: String, numHashes: Int): Array[Long] =
-    minhashSigOf(shingles(text), numHashes)
-
   /** MinHash signature of a pre-computed shingle set. */
   def minhashSigOf(sh: Seq[String], numHashes: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(Long.MaxValue)

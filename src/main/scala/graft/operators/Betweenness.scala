@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,16 +51,11 @@ object Betweenness {
         .groupBy("q", "id").agg(sum(col("sigma")).as("sigma"))
       val fresh = cand.join(state.select("q", "id"), Seq("q", "id"),
         "left_anti")
-      val obs = org.apache.spark.sql.Observation(s"bc_fwd_$r")
-      state = state.unionAll(
-        fresh.select(col("q"), col("id"), lit(r).as("dist"), col("sigma")))
-        .observe(obs, sum(when(col("dist") === r, 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true)
-      val added = obs.get.get("n") match {
-        case Some(l: Long) => l
-        case _             => 0L
-      }
-      if (added > 0) deepest = r else exhausted = true
+      val o = Materialize.observed(state.unionAll(
+          fresh.select(col("q"), col("id"), lit(r).as("dist"), col("sigma"))),
+        sum(when(col("dist") === r, 1L).otherwise(0L)).as("n"))
+      state = o.df
+      if (o.long("n") > 0) deepest = r else exhausted = true
     }
     (state, deepest)
   }

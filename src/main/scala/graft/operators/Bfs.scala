@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,15 +43,11 @@ object Bfs {
       val scatter = adj.blocks
         .join(frontier, adj.blocks("src") === frontier("id"))
         .select(explode(col("dsts")).as("id"), (col("dist") + 1).as("dist"))
-      val obs = org.apache.spark.sql.Observation(s"bfs_fr_$r")
-      state = state.unionAll(scatter)
-        .groupBy("id").agg(min(col("dist")).as("dist"))
-        .observe(obs, sum(when(col("dist") === r, 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true)
-      exhausted = (obs.get.get("n") match {
-        case Some(l: Long) => l
-        case _             => 0L
-      }) == 0L
+      val o = Materialize.observed(state.unionAll(scatter)
+        .groupBy("id").agg(min(col("dist")).as("dist")),
+        sum(when(col("dist") === r, 1L).otherwise(0L)).as("n"))
+      state = o.df
+      exhausted = o.long("n") == 0L
     }
     state
   }
@@ -86,12 +83,12 @@ object Bfs {
         .select(explode(col("dsts")).as("id"), (col("dist") + 1).as("dist"))
         .groupBy("id").agg(min(col("dist")).as("dist"))
       val grown = mins.join(state, Seq("id"), "left_anti")
-      val obs = org.apache.spark.sql.Observation(s"bfs_$rounds")
-      state = state.select(col("id"), col("dist"), lit(false).as("fresh"))
-        .unionAll(grown.select(col("id"), col("dist"), lit(true).as("fresh")))
-        .observe(obs, sum(when(col("fresh"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true)
-      newly = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+      val o = Materialize.observed(
+        state.select(col("id"), col("dist"), lit(false).as("fresh"))
+          .unionAll(grown.select(col("id"), col("dist"), lit(true).as("fresh"))),
+        sum(when(col("fresh"), 1L).otherwise(0L)).as("n"))
+      state = o.df
+      newly = o.long("n")
       rounds += 1
     }
     (state.select(col("id"), col("dist")), rounds)

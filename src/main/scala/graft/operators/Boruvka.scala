@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,12 +38,6 @@ import org.apache.spark.sql.functions._
  */
 object Boruvka {
 
-  /** Eager checkpoint with CAPPED size statistics — the pointer-jump
-    * self-joins otherwise square Catalyst's sizeInBytes estimate every
-    * round (see [[org.apache.spark.sql.GraftPlanBridge]]). */
-  private def ck(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
-
   /** Labeled cross-component edges of `cur` under `comp`. */
   private def cross(cur: DataFrame, comp: DataFrame): DataFrame =
     cur
@@ -65,7 +60,7 @@ object Boruvka {
       .unionAll(x.select(col("cd").as("c"),
         struct(col("w"), col("src"), col("dst"), col("cs").as("other"))
           .as("e")))
-    val sel = ck(cand.groupBy("c").agg(min(col("e")).as("e"))
+    val sel = Materialize(cand.groupBy("c").agg(min(col("e")).as("e"))
       .select(col("c"), col("e.w").as("w"), col("e.src").as("src"),
         col("e.dst").as("dst"), col("e.other").as("other")))
     // an edge picked from both sides enters the forest once
@@ -76,7 +71,7 @@ object Boruvka {
     // minima. `other` always has a pick of its own (it owns a cross edge),
     // so the inner join is total.
     val q = sel.select(col("c").as("qc"), col("other").as("qp"))
-    var p = ck(sel.join(q, sel("other") === col("qc"))
+    var p = Materialize(sel.join(q, sel("other") === col("qc"))
       .select(col("c"),
         when(col("qp") === col("c") && col("c") < col("other"), col("c"))
           .otherwise(col("other")).as("p")))
@@ -90,13 +85,13 @@ object Boruvka {
     var j = 0
     while (moved > 0 && jumpRounds.forall(j < _)) {
       val pr = p.select(col("c").as("jc"), col("p").as("jp"))
-      val obs = org.apache.spark.sql.Observation()
-      p = ck(p.join(pr, p("p") === col("jc"))
+      val o = Materialize.observed(p.join(pr, p("p") === col("jc"))
         .select(col("c"), col("jp").as("p"),
-          (col("jp") =!= col("p")).as("m"))
-        .observe(obs, sum(when(col("m"), 1L).otherwise(0L)).as("n"))
-        .select(col("c"), col("p")))
-      moved = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+          (col("jp") =!= col("p")).as("m")),
+        Seq(sum(when(col("m"), 1L).otherwise(0L)).as("n")),
+        _.select(col("c"), col("p")))
+      p = o.df
+      moved = o.long("n")
       j += 1
     }
     // Hook chains can be O(#components), not O(log): if the fixed bound
@@ -113,7 +108,7 @@ object Boruvka {
   }
 
   private def translate(comp: DataFrame, p: DataFrame): DataFrame =
-    ck(comp.join(p, comp("comp") === p("c"), "left")
+    Materialize(comp.join(p, comp("comp") === p("c"), "left")
       .select(comp("id"), coalesce(col("p"), comp("comp")).as("comp")))
 
   /** Exactly `rounds` Boruvka rounds with exactly `jumps` pointer jumps
@@ -121,12 +116,12 @@ object Boruvka {
     * component count — extra jumps are no-ops): forest edges picked so
     * far as (src, dst, w). */
   def fixedRounds(edges: DataFrame, rounds: Int, jumps: Int = 12): DataFrame = {
-    var comp = ck(GraphOps.vertices(edges)
+    var comp = Materialize(GraphOps.vertices(edges)
       .select(col("id"), col("id").as("comp")))
-    var cur = ck(edges.select("src", "dst", "w"))
+    var cur = Materialize(edges.select("src", "dst", "w"))
     var mst = cur.limit(0)
     for (_ <- 1 to rounds) {
-      val x = ck(cross(cur, comp))
+      val x = Materialize(cross(cur, comp))
       val (picked, p) = round(x, Some(jumps))
       mst = mst.unionAll(picked)
       comp = translate(comp, p)
@@ -138,17 +133,16 @@ object Boruvka {
   /** To the drained cross-edge set: (minimum spanning forest edges,
     * rounds). Pointer jumps run to fixpoint each round. */
   def run(edges: DataFrame, maxIter: Int = 100): (DataFrame, Int) = {
-    var comp = ck(GraphOps.vertices(edges)
+    var comp = Materialize(GraphOps.vertices(edges)
       .select(col("id"), col("id").as("comp")))
-    var cur = ck(edges.select("src", "dst", "w"))
+    var cur = Materialize(edges.select("src", "dst", "w"))
     var mst = cur.limit(0)
     var rounds = 0
     var left = cur.count()
     while (left > 0 && rounds < maxIter) {
-      val obs = org.apache.spark.sql.Observation()
-      val x = ck(cross(cur, comp)
-        .observe(obs, count(lit(1)).as("n")))
-      left = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+      val o = Materialize.observed(cross(cur, comp), count(lit(1)).as("n"))
+      val x = o.df
+      left = o.long("n")
       if (left > 0) {
         val (picked, p) = round(x, None)
         mst = mst.unionAll(picked)

@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.exec.Materialize
 import graft.plans.SnapshotStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.ArrayBuffer
 
 final case class ComponentsResult(components: DataFrame, iterations: Int,
@@ -64,11 +64,6 @@ final case class ComponentsResult(components: DataFrame, iterations: Int,
  */
 object ConnectedComponents {
 
-  /** Capped eager checkpoint — pointer-jump self-joins square Catalyst's
-    * size estimate per round (see GraftPlanBridge). */
-  private def ck(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
-
   def run(
       adj: Adjacency,
       maxIter: Int = 1000,
@@ -86,7 +81,7 @@ object ConnectedComponents {
     // comp_old > comp_current test gating the push (l.213), widened to
     // "changed since this vertex last pushed" so a jump-round shrink is
     // still pushed by the next relax round.
-    var state = ck(resumed.map(_._2).getOrElse(
+    var state = Materialize(resumed.map(_._2).getOrElse(
       adj.vertices.select(col("id"), col("id").as("comp"),
         lit(true).as("changed"))))
 
@@ -96,7 +91,9 @@ object ConnectedComponents {
     def converged = lastChanged == 0 && prevChanged == 0
 
     // one relax-or-jump superstep over (state, mins-producer); returns the
-    // next state after observe + capped checkpoint, and updates counters
+    // next state after observe + capped checkpoint (pointer-jump
+    // self-joins square Catalyst's size estimate per round, see
+    // GraftPlanBridge), and updates counters
     def step(cur: DataFrame, relaxRound: Boolean,
         minsOf: DataFrame => DataFrame): DataFrame = {
       val stepped =
@@ -116,15 +113,11 @@ object ConnectedComponents {
               col("ccomp").as("comp"),
               (col("changed") || (col("ccomp") < cur("comp"))).as("changed"))
         }
-      val obs = org.apache.spark.sql.Observation(s"cc_$iter")
-      val next = ck(stepped
-        .observe(obs, sum(when(col("changed"), 1L).otherwise(0L)).as("n")))
+      val o = Materialize.observed(stepped,
+        sum(when(col("changed"), 1L).otherwise(0L)).as("n"))
       prevChanged = lastChanged
-      lastChanged = obs.get.get("n") match {
-        case Some(l: Long) => l
-        case _             => 0L
-      }
-      next
+      lastChanged = o.long("n")
+      o.df
     }
 
     def blockMins(frontier: DataFrame): DataFrame =
@@ -165,21 +158,17 @@ object ConnectedComponents {
 
     // ---- contract: distinct cross-cluster label pairs ----
     val tc = System.nanoTime()
-    val labels = ck(state.select(col("id"), col("comp")))
+    val labels = Materialize(state.select(col("id"), col("comp")))
     val lsrc = labels.select(col("id").as("src"), col("comp").as("cs"))
     val ldst = labels.select(col("id").as("dst"), col("comp").as("cd"))
-    val obsC = org.apache.spark.sql.Observation(s"cc_contract_$iter")
-    val e1 = ck(adj.blocks
+    val oc = Materialize.observed(adj.blocks
       .select(col("src"), explode(col("dsts")).as("dst"))
       .join(lsrc, "src").join(ldst, "dst")
       .filter(col("cs") =!= col("cd"))
       .select(col("cs").as("src"), col("cd").as("dst"))
-      .distinct()
-      .observe(obsC, count(lit(1)).as("n")))
-    val contracted = obsC.get.get("n") match {
-      case Some(l: Long) => l
-      case _             => 0L
-    }
+      .distinct(), count(lit(1)).as("n"))
+    val e1 = oc.df
+    val contracted = oc.long("n")
     // metrics row: how much edge traffic the contraction removed — the
     // "measurably fewer joined rows per round" evidence
     store.foreach(_.appendMetrics("cc_contract", iter, contracted.toDouble,
@@ -199,7 +188,7 @@ object ConnectedComponents {
         .select(labels("id"), col("cc").as("comp"), lit(true).as("changed"))
 
     // ---- phase 2: min-label + jump fixpoint on the cluster graph ----
-    var cstate = ck(labels.select(col("comp").as("id")).distinct()
+    var cstate = Materialize(labels.select(col("comp").as("id")).distinct()
       .select(col("id"), col("id").as("comp"), lit(true).as("changed")))
     lastChanged = Long.MaxValue
     prevChanged = Long.MaxValue

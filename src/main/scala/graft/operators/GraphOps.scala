@@ -151,13 +151,4 @@ object GraphOps {
   def attachWeights(edges: DataFrame, modulus: Long = 97L): DataFrame =
     edges.withColumn("w",
       lit(1L) + pmod(col("src") * 7 + col("dst") * 13, lit(modulus)))
-
-  /** Apply a relabel dictionary to an edge table (two broadcast-or-shuffle
-    * hash joins, like the reference's offline re-id pass). */
-  def applyRelabel(edges: DataFrame, dict: DataFrame): DataFrame = {
-    val dSrc = dict.select(col("id").as("src"), col("new_id").as("new_src"))
-    val dDst = dict.select(col("id").as("dst"), col("new_id").as("new_dst"))
-    edges.join(dSrc, "src").join(dDst, "dst")
-      .select(col("new_src").as("src"), col("new_dst").as("dst"))
-  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,13 +62,9 @@ object IndependentSet {
       // a drained remaining set makes every later round a no-op — skip
       // them (the observe rides the materializing pass; result equals
       // the full unroll)
-      val obs = org.apache.spark.sql.Observation()
-      remaining = next.observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      drained = (obs.get.get("n") match {
-        case Some(l: Long) => l
-        case _             => 0L
-      }) == 0L
+      val o = Materialize.observed(next, count(lit(1)).as("n"))
+      remaining = o.df
+      drained = o.long("n") == 0L
     }
     mis
   }
@@ -83,11 +80,9 @@ object IndependentSet {
     while (left > 0 && rounds < maxIter) {
       val (winners, next) = round(symEdges, remaining)
       mis = mis.unionAll(winners)
-      val obs = org.apache.spark.sql.Observation(s"mis_$rounds")
-      remaining = next
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      left = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+      val o = Materialize.observed(next, count(lit(1)).as("n"))
+      remaining = o.df
+      left = o.long("n")
       rounds += 1
     }
     (mis, rounds)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,11 +37,9 @@ object KCore {
     var alive = -1L
     var done = false
     for (r <- 1 to rounds if !done) {
-      val obs = org.apache.spark.sql.Observation(s"kcore_f_$r")
-      edges = peel(edges, k)
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val n = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+      val o = Materialize.observed(peel(edges, k), count(lit(1)).as("n"))
+      edges = o.df
+      val n = o.long("n")
       done = n == alive || n == 0L
       alive = n
     }
@@ -55,11 +54,9 @@ object KCore {
     var rounds = 0
     while (alive != prev && alive > 0 && rounds < maxIter) {
       prev = alive
-      val obs = org.apache.spark.sql.Observation(s"kcore_$rounds")
-      edges = peel(edges, k)
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      alive = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+      val o = Materialize.observed(peel(edges, k), count(lit(1)).as("n"))
+      edges = o.df
+      alive = o.long("n")
       rounds += 1
     }
     (edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")), rounds)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -112,13 +113,12 @@ object KTruss {
     * semi-join would drop zero-support edges even when k ≤ 2 (where
     * sup ≥ k−2 holds at 0 and the 2-truss is the whole graph). */
   private def peel(s: State, k: Int, needNext: Boolean): State = {
-    val obs = org.apache.spark.sql.Observation()
-    val scored = s.o.join(s.sup, Seq("lo", "hi"), "left")
+    val o = Materialize.observed(s.o.join(s.sup, Seq("lo", "hi"), "left")
       .select(col("lo"), col("hi"), col("fwd"),
-        coalesce(col("sup"), lit(0L)).as("sup"))
-      .observe(obs, sum(when(col("sup") < k - 2, 1L).otherwise(0L)).as("d"))
-      .localCheckpoint(true)
-    val dropped = obs.get.get("d") match { case Some(l: Long) => l; case _ => 0L }
+        coalesce(col("sup"), lit(0L)).as("sup")),
+      sum(when(col("sup") < k - 2, 1L).otherwise(0L)).as("d"))
+    val scored = o.df
+    val dropped = o.long("d")
     val o2 = scored.filter(col("sup") >= k - 2).select("lo", "hi", "fwd")
     if (!needNext || dropped == 0L) return State(o2, s.sup, dropped)
     val dead = scored.filter(col("sup") < k - 2)

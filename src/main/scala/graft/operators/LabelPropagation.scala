@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Label propagation — the reference's label-propagation kernel
@@ -34,23 +34,16 @@ object LabelPropagation {
         .groupBy("id").agg(min(col("msg")).as("msg"))
       // the changed flag rides the materializing pass (Dataset.observe) —
       // no extra fixpoint join/scan per round
-      val obs = org.apache.spark.sql.Observation(s"lpa_$round")
-      val next = state
+      val o = Materialize.observed(state
         .join(mins, Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("msg"), col("label"))).as("label"),
-          (coalesce(col("msg"), col("label")) < col("label")).as("ch"))
-        .observe(obs, sum(when(col("ch"), 1L).otherwise(0L)).as("n"))
-        .select(col("id"), col("label"))
-        .localCheckpoint(true) // truncate iterative lineage (see PageRank)
-      if (k <= 0) {
-        done = (obs.get.get("n") match {
-          case Some(l: Long) => l
-          case _             => 0L
-        }) == 0
-      }
+          (coalesce(col("msg"), col("label")) < col("label")).as("ch")),
+        Seq(sum(when(col("ch"), 1L).otherwise(0L)).as("n")),
+        _.select(col("id"), col("label")))
+      if (k <= 0) done = o.long("n") == 0
       round += 1
-      state = next
+      state = o.df
     }
     state
   }

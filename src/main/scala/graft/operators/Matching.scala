@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -74,13 +75,9 @@ object Matching {
       // After the FINAL round nothing consumes `remaining` — skip that
       // materialization outright.
       if (r < rounds) {
-        val obs = org.apache.spark.sql.Observation()
-        remaining = next.observe(obs, count(lit(1)).as("n"))
-          .localCheckpoint(true)
-        drained = (obs.get.get("n") match {
-          case Some(l: Long) => l
-          case _             => 0L
-        }) == 0L
+        val o = Materialize.observed(next, count(lit(1)).as("n"))
+        remaining = o.df
+        drained = o.long("n") == 0L
       }
     }
     matched
@@ -97,10 +94,9 @@ object Matching {
     while (left > 0 && rounds < maxIter) {
       val (winners, next) = round(remaining)
       matched = matched.unionAll(winners)
-      val obs = org.apache.spark.sql.Observation(s"matching_$rounds")
-      remaining = next.observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      left = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+      val o = Materialize.observed(next, count(lit(1)).as("n"))
+      remaining = o.df
+      left = o.long("n")
       rounds += 1
     }
     (matched, rounds)

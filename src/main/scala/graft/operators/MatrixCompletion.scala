@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -36,14 +37,6 @@ import org.apache.spark.sql.functions._
  */
 object MatrixCompletion {
 
-  /** Eager checkpoint with CAPPED size statistics (see GraftPlanBridge:
-    * per-round joins multiply Catalyst's size-only estimate; capping the
-    * checkpointed leaf keeps the driver out of giant-BigInteger
-    * arithmetic over many rounds). */
-  private def ck(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
-
-
   val D = 4
   val S = 128L         // fixed-point scale
   private val LR = 8L  // learning rate 1/LR
@@ -72,9 +65,9 @@ object MatrixCompletion {
       .repartition(col("u"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var uf = initFactors(rat.select(col("u").as("id")).distinct(), 31L, 17L)
-      .transform(ck)
+      .transform(Materialize(_))
     var vf = initFactors(rat.select(col("i").as("id")).distinct(), 37L, 23L)
-      .transform(ck)
+      .transform(Materialize(_))
 
     // (err, v-columns or u-columns) per rating under the current state
     def errs: DataFrame = {
@@ -94,14 +87,10 @@ object MatrixCompletion {
     for (t <- 1 to rounds) {
       // the round's sse rides the checkpoint's materializing pass
       // (Dataset.observe) instead of a second scan of the cached frame
-      val obs = org.apache.spark.sql.Observation(s"mc_sse_$t")
-      val e = errs
-        .observe(obs, sum(col("err") * col("err")).as("sse"))
-        .transform(ck)
-      sse += (obs.get.get("sse") match {
-        case Some(l: Long) => l
-        case _             => 0L
-      })
+      val o = Materialize.observed(errs,
+        sum(col("err") * col("err")).as("sse"))
+      val e = o.df
+      sse += o.long("sse")
       if (t % 2 == 1) {
         // gather into users: u_k += floor(Σ err·v_k / (S·LR·deg))
         val aggs = count(lit(1)).as("deg") +:
@@ -114,7 +103,7 @@ object MatrixCompletion {
               (col(s"f$k") +
                 floorDiv(col(s"g$k"), lit(S * LR) * col("deg")))
                 .as(s"f$k")): _*)
-          .transform(ck)
+          .transform(Materialize(_))
       } else {
         val aggs = count(lit(1)).as("deg") +:
           (0 until D).map(k => sum(col("err") * col(s"uf$k")).as(s"g$k"))
@@ -126,7 +115,7 @@ object MatrixCompletion {
               (col(s"f$k") +
                 floorDiv(col(s"g$k"), lit(S * LR) * col("deg")))
                 .as(s"f$k")): _*)
-          .transform(ck)
+          .transform(Materialize(_))
       }
     }
     sse += errs.agg(sum(col("err") * col("err"))).first().getLong(0)
@@ -137,14 +126,4 @@ object MatrixCompletion {
   /** Driver-query form: user factors after `rounds` rounds, (u, f0..f3). */
   def userFactors(ratings: DataFrame, rounds: Int): DataFrame =
     run(ratings, rounds)._1.withColumnRenamed("id", "u")
-
-  /** Driver-query form: (round, sse) — sse before each round plus final;
-    * the convergence trace the reference prints per SGD sweep. */
-  def sseTrace(ratings: DataFrame, rounds: Int): DataFrame = {
-    val spark = ratings.sparkSession
-    import spark.implicits._
-    run(ratings, rounds)._3.zipWithIndex
-      .map { case (s, t) => (t.toLong + 1L, s) }
-      .toDF("round", "sse")
-  }
 }

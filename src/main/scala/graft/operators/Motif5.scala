@@ -314,9 +314,9 @@ object Motif5 {
     * new variables, then the new variable with the most pending factors
     * back into the current boundary. */
   def homCount(k: Int, pedges: Seq[(Int, Int)], arcs: DataFrame,
-      cliqueCount: Option[Int => Long] = None,
-      foldMemo: Option[java.util.concurrent.ConcurrentHashMap[
-        String, DataFrame]] = None): Long = {
+      cliqueCount: Int => Long,
+      foldMemo: java.util.concurrent.ConcurrentHashMap[String, DataFrame])
+      : Long = {
     require(pedges.nonEmpty)
     // Precondition: the pattern must be CONNECTED — the elimination
     // joins every vertex's factor bucket as one component, and a
@@ -349,10 +349,7 @@ object Motif5 {
     // build across every complete quotient (K2..K5) instead of
     // re-orienting the arc frame per call.
     if (pedges.size == k * (k - 1) / 2)
-      return (1L to k.toLong).product *
-        cliqueCount.map(f => f(k)).getOrElse(
-          Mining.kcliqueCount(arcs.select(col("x").as("src"),
-            col("y").as("dst")), k))
+      return (1L to k.toLong).product * cliqueCount(k)
     var factors: List[Factor] = pedges.toList.map { case (a, b) =>
       Factor(Set(a, b), arcs.select(col("x").as(s"v$a"), col("y").as(s"v$b"),
         lit(1L).as("cnt")), absorbed = Set((a min b, a max b)))
@@ -409,33 +406,26 @@ object Motif5 {
               coalesce(sum(col("cnt")), lit(0L)).as("cnt")),
             folded = true, absorbedAll, internalAll)
         else {
-          def genericFold = curDf
-            .groupBy(outVars.map(v => col(s"v$v")): _*)
-            .agg(sum(col("cnt")).as("cnt"))
-          foldMemo match {
-            case Some(memo) =>
-              // cross-job sharing: the fold's value is the extension
-              // count of its absorbed sub-pattern, so any fold with the
-              // same canonical (boundary-distinguished) structure is
-              // the SAME frame up to the boundary bijection foldKey
-              // returns. computeIfAbsent materializes it exactly once
-              // (eager checkpoint) across the census's hom-job pool;
-              // positional ties between producer and consumer differ
-              // only by an automorphism of the canonical form, under
-              // which the function is symmetric.
-              val (ck, pos) = foldKey(curVars - x, internalAll, absorbedAll)
-              val frame = memo.computeIfAbsent(ck, _ =>
-                genericFold.select(outVars.zip(pos).map { case (v, p) =>
-                    col(s"v$v").as(s"c$p") } :+ col("cnt"): _*)
-                  .localCheckpoint(true))
-              Factor(curVars - x,
-                frame.select(outVars.zip(pos).map { case (v, p) =>
-                  col(s"c$p").as(s"v$v") } :+ col("cnt"): _*),
-                folded = true, absorbedAll, internalAll)
-            case None =>
-              Factor(curVars - x, genericFold, folded = true,
-                absorbedAll, internalAll)
-          }
+          // cross-job sharing: the fold's value is the extension count
+          // of its absorbed sub-pattern, so any fold with the same
+          // canonical (boundary-distinguished) structure is the SAME
+          // frame up to the boundary bijection foldKey returns.
+          // computeIfAbsent materializes it exactly once (eager
+          // checkpoint) across the census's hom-job pool; positional ties
+          // between producer and consumer differ only by an automorphism
+          // of the canonical form, under which the function is symmetric.
+          val (key, pos) = foldKey(curVars - x, internalAll, absorbedAll)
+          val frame = foldMemo.computeIfAbsent(key, _ =>
+            curDf
+              .groupBy(outVars.map(v => col(s"v$v")): _*)
+              .agg(sum(col("cnt")).as("cnt"))
+              .select(outVars.zip(pos).map { case (v, p) =>
+                col(s"v$v").as(s"c$p") } :+ col("cnt"): _*)
+              .localCheckpoint(true))
+          Factor(curVars - x,
+            frame.select(outVars.zip(pos).map { case (v, p) =>
+              col(s"c$p").as(s"v$v") } :+ col("cnt"): _*),
+            folded = true, absorbedAll, internalAll)
         }
       factors = newFactor ::
         factors.filterNot(f => closure.exists(_ eq f))
@@ -479,34 +469,20 @@ object Motif5 {
     // the jobs become stepwise-materialized and often BLOCK on a shared
     // fold's computeIfAbsent, so a somewhat larger pool is needed to
     // keep independent work in flight while producers materialize
-    // (measured below in OPTIMIZATION_r06.md).
-    val poolSize = sys.env.get("GRAFT_MOTIF5_POOL").map(_.toInt)
-      .getOrElse(10)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+    // (measured in OPTIMIZATION_r06.md).
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(10)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val trace = sys.env.contains("GRAFT_MOTIF5_TRACE")
     // one fold memo per census call (per-JVM, rebuilt from the arc
     // frame every invocation): the ~30 hom jobs share every
     // structurally-identical folded message (degree tables,
     // common-neighbor counts, path messages, triangle-extension
     // counts) instead of each re-aggregating its own copy.
-    val foldMemo =
-      if (sys.env.contains("GRAFT_MOTIF5_NOMEMO")) None
-      else Some(
-        new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
+    val foldMemo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
     val homs: Map[QKey, Long] =
       try Await.result(
         Future.sequence(keys.map(q =>
-          Future {
-            val t0 = System.nanoTime()
-            val h = homCount(q.k, q.qedges, arcs, Some(cliqueFn),
-              foldMemo)
-            if (trace) System.err.println(
-              f"MOTIF5_HOM k=${q.k} edges=${q.qedges.mkString(";")} " +
-                f"hom=$h secs=${(System.nanoTime() - t0) / 1e9}%.1f " +
-                f"memo=${foldMemo.map(_.size).getOrElse(-1)}")
-            q -> h
-          })), Duration.Inf).toMap
+          Future(q -> homCount(q.k, q.qedges, arcs, cliqueFn, foldMemo))
+        )), Duration.Inf).toMap
       finally pool.shutdown()
     val subs = patterns.indices.map { i =>
       val inj = terms(i).map { case (c, q) => c * homs(q) }.sum

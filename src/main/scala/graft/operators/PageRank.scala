@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import graft.plans.SnapshotStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -60,11 +61,6 @@ object PageRank {
       resume: Boolean = false,
       checkEvery: Int = 1): PageRankResult = {
 
-    // capped eager checkpoint: the gather join multiplies the checkpoint
-    // leaf's inherited size estimate every superstep (see GraftPlanBridge)
-    def ck(df: DataFrame): DataFrame =
-      org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
-
     // tol < 0 → fixed-iteration mode: no residual, no self rows.
     val trackResidual = tol >= 0
     val n = adj.numVertices
@@ -114,19 +110,21 @@ object PageRank {
       // bench loops. Residual mode keeps the caller's checkEvery.
       val chunk = if (trackResidual) checkEvery else math.max(checkEvery, 8)
       val steps = math.min(chunk, maxIter - iter)
-      // localCheckpoint truncates the logical plan at every
-      // materialization. Durability across executor loss comes from the
-      // SnapshotStore commits, not this non-reliable checkpoint.
+      // The capped local checkpoint truncates the logical plan at every
+      // materialization (the gather join would otherwise multiply the
+      // leaf's size estimate every superstep). Durability across executor
+      // loss comes from the SnapshotStore commits, not this checkpoint.
       val chain = (1 until steps).foldLeft(state)((st, _) => superstep(st))
       var (next, l1) =
-        if (!trackResidual) (ck(superstep(chain)), Double.NaN)
+        if (!trackResidual) (Materialize(superstep(chain)), Double.NaN)
         else {
           // the checked step reads its input twice (gather, self rows), so
           // the input is materialized; the residual rides the step's action
-          val obs = org.apache.spark.sql.Observation()
-          (ck(checkedSuperstep(if (steps == 1) chain else ck(chain))
-            .observe(obs, sum(abs(col("value") - col("prev"))).as("l1"))
-            .select(col("id"), col("value"))), observed(obs, "l1", 0.0))
+          val o = Materialize.observed(
+            checkedSuperstep(if (steps == 1) chain else Materialize(chain)),
+            Seq(sum(abs(col("value") - col("prev"))).as("l1")),
+            _.select(col("id"), col("value")))
+          (o.df, o.double("l1"))
         }
 
       iter += steps
@@ -143,13 +141,6 @@ object PageRank {
     }
     PageRankResult(state, iter, converged, metrics.toSeq)
   }
-
-  /** An observed metric: a missing key throws rather than pass as
-    * converged or not; a null sum (empty input) reads as `zero`. */
-  private def observed[T](obs: org.apache.spark.sql.Observation,
-      key: String, zero: T): T =
-    Option(obs.get.getOrElse(key, throw new IllegalStateException(
-      s"observed metric '$key' missing"))).fold(zero)(_.asInstanceOf[T])
 
   /** Exactly `k` pull-topo iterations, no convergence check — the
     * deterministic kernel used by the SQL-oracle correctness queries. */
@@ -295,8 +286,7 @@ object PageRank {
         .groupBy("id").agg(sum(col("d")).as("dsum"))
 
       val active = col("residual") > tol
-      val obs = org.apache.spark.sql.Observation()
-      var next = state
+      val o = Materialize.observed(state
         .join(deltas, Seq("id"), "left")
         .select(
           col("id"), col("deg"),
@@ -304,15 +294,14 @@ object PageRank {
             .as("value"),
           when(col("dsum") > 0, col("dsum"))
             .otherwise(when(active, lit(0.0)).otherwise(col("residual")))
-            .as("residual"))
-        .observe(obs,
-          sum(when(col("residual") > tol && col("deg") > 0, 1L)
-            .otherwise(0L)).as("accum"),
-          sum(col("residual")).as("res_l1"))
-        .localCheckpoint(true)
+            .as("residual")),
+        sum(when(col("residual") > tol && col("deg") > 0, 1L)
+          .otherwise(0L)).as("accum"),
+        sum(col("residual")).as("res_l1"))
 
-      nextAccum = observed(obs, "accum", 0L)
-      val l1 = observed(obs, "res_l1", 0.0)
+      var next = o.df
+      nextAccum = o.long("accum")
+      val l1 = o.double("res_l1")
       iter += 1
       val ms = (System.nanoTime() - t0) / 1000000
       metrics += IterMetric(iter, l1, adj.numEdges, ms)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,14 +33,6 @@ import org.apache.spark.sql.functions._
  * `solve` iterates to convergence with one count action per round.
  */
 object PointsTo {
-
-  /** Eager checkpoint with CAPPED size statistics (see GraftPlanBridge:
-    * per-round joins multiply Catalyst's size-only estimate; capping the
-    * checkpointed leaf keeps the driver out of giant-BigInteger
-    * arithmetic over many rounds). */
-  private def ck(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
-
 
   /** One SEMI-NAIVE round: new copy edges derive only from the pts
     * DELTA (facts first seen last round), and propagation joins the
@@ -86,10 +79,10 @@ object PointsTo {
   def fixedRounds(addressOf: DataFrame, copies: DataFrame,
       loads: DataFrame, stores: DataFrame, rounds: Int): DataFrame = {
     var pts = addressOf.select(col("var"), col("obj")).distinct()
-      .transform(ck)
+      .transform(Materialize(_))
     var dPts = pts // round 1: everything is new
     var copy = copies.select(col("src"), col("dst")).distinct()
-      .transform(ck)
+      .transform(Materialize(_))
     // only the two DELTAS are materialized per round (concurrently —
     // one latency); the full pts/copy relations stay LAZY unions of the
     // already-checkpointed deltas, so the heavy prop ∪ distinct ∪
@@ -105,7 +98,7 @@ object PointsTo {
     try {
       for (_ <- 1 to rounds) {
         val (_, d2, _, dc) = round(pts, dPts, copy, loads, stores)
-        val (dF, cF) = (Future(d2.transform(ck)), Future(dc.transform(ck)))
+        val (dF, cF) = (Future(Materialize(d2)), Future(Materialize(dc)))
         dPts = Await.result(dF, Duration.Inf)
         val dCopy = Await.result(cF, Duration.Inf)
         pts = pts.unionByName(dPts)
@@ -123,16 +116,16 @@ object PointsTo {
   def solve(addressOf: DataFrame, copies: DataFrame, loads: DataFrame,
       stores: DataFrame, maxRounds: Int = 50): DataFrame = {
     var pts = addressOf.select(col("var"), col("obj")).distinct()
-      .transform(ck)
+      .transform(Materialize(_))
     var dPts = pts
     var copy = copies.select(col("src"), col("dst")).distinct()
-      .transform(ck)
+      .transform(Materialize(_))
     var it = 0
     var frontier = dPts.count()
     while (frontier > 0 && it < maxRounds) {
       val (_, d2, _, dc) = round(pts, dPts, copy, loads, stores)
-      dPts = d2.transform(ck)
-      copy = copy.unionByName(dc.transform(ck))
+      dPts = Materialize(d2)
+      copy = copy.unionByName(Materialize(dc))
       pts = pts.unionByName(dPts)
       frontier = dPts.count()
       it += 1

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,14 +37,11 @@ import org.apache.spark.sql.functions._
  */
 object PreflowPush {
 
-  /** Eager checkpoint with CAPPED size statistics: each superstep joins
-    * the arc table against three O(V) state tables and then against its
-    * own push output — Catalyst's size-only estimator multiplies across
-    * every join, so the uncapped per-round estimate quadruples its bit
-    * length and the driver ends up doing multi-megabit BigInteger
-    * products (measured minutes of driver CPU by round 8). */
-  private def ck(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanBridge.checkpointCapped(df)
+  // Every checkpoint is capped (Materialize): each superstep joins the arc
+  // table against three O(V) state tables and then against its own push
+  // output, so an uncapped size estimate quadruples its bit length per
+  // round (measured minutes of driver CPU in BigInteger products by
+  // round 8).
 
   /** (arcs (u,v,res), excess (id,ex), heights (id,h), n) initial state
     * with the source saturated. Parallel/reverse input edges merge. */
@@ -53,9 +51,9 @@ object PreflowPush {
       .unionByName(edges.select(col("v").as("u"), col("u").as("v"),
         lit(0L).as("cap")))
       .groupBy("u", "v").agg(sum(col("cap")).as("res"))
-      .transform(ck)
+      .transform(Materialize(_))
     val verts = arcs0.select(col("u").as("id")).distinct()
-      .transform(ck)
+      .transform(Materialize(_))
     val n = verts.count()
     // saturate source arcs: res(s→v) → 0, res(v→s) += cap(s→v),
     // ex(v) = cap(s→v)
@@ -95,7 +93,7 @@ object PreflowPush {
         least(col("res"), col("ex") - (col("cum") - col("res"))))
       .filter(col("p") > 0)
       .select(col("u"), col("v"), col("p"))
-      .transform(ck)
+      .transform(Materialize(_))
     val outP = pushes.groupBy(col("u").as("id")).agg(sum("p").as("po"))
     val inP = pushes.groupBy(col("v").as("id")).agg(sum("p").as("pi"))
     // arcs2, ex2 AND h2 are all pure dataflows over the checkpointed
@@ -122,8 +120,8 @@ object PreflowPush {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
-    val arcs2F = Future { ck(arcs2Plan) }
-    val ex2F = Future { ck(ex2Plan) }
+    val arcs2F = Future { Materialize(arcs2Plan) }
+    val ex2F = Future { Materialize(ex2Plan) }
     // relabel on the new residual graph, old heights. One pass over the
     // residual arcs computes BOTH relabel inputs per vertex — the min
     // neighbor height and whether any admissible arc remains — instead
@@ -143,7 +141,7 @@ object PreflowPush {
           when(col("ex2") > 0 && col("id") =!= s && col("id") =!= t &&
               coalesce(col("adm"), lit(0L)) === 0L,
             coalesce(col("mh") + 1, col("h"))).otherwise(col("h")).as("h"))
-        .transform(ck)
+        .transform(Materialize(_))
     }
     val (arcs2, ex2, h2) =
       try (Await.result(arcs2F, Duration.Inf),

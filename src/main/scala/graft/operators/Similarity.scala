@@ -110,22 +110,6 @@ object Similarity {
       .filter(col("cos_i4") >= math.round(threshold * 10000))
   }
 
-  /** Disk-persisted form of [[lshBucketsMulti]] — the offline-IVF-index
-    * analog: the corpus-side bucket table is query-independent, so it is
-    * built ONCE per (corpus, bits, tables, seed), written as parquet at
-    * `path`, and every later process (or query) just scans it. At 100 TB
-    * the index build is a separate offline job; serving pays only the
-    * probe joins. Rebuild by deleting the path. */
-  def loadOrBuildIndex(emb: DataFrame, path: String, bits: Int, tables: Int,
-      seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
-      lshBucketsMulti(emb, bits, tables, seed)
-        .write.mode("overwrite").parquet(path)
-    }
-    spark.read.parquet(path)
-  }
-
   /** Approximate-nearest-neighbor top-k — the 100 TB shape of
     * [[bruteTopK]]: instead of scanning the corpus per query, the corpus
     * is bucketed ONCE per hash table and each query probes its own bucket

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -109,17 +110,16 @@ object Sssp {
     while (changed > 0 && rounds < maxIter) {
       val frontier = state.filter(col("improved"))
       val cand = relax(adj, frontier)
-      val obs = org.apache.spark.sql.Observation(s"sssp_$rounds")
-      state = state
+      val o = Materialize.observed(state
         .join(cand.withColumnRenamed("dist", "nd"), Seq("id"), "full")
         .select(col("id"),
           least(coalesce(col("dist"), col("nd")),
             coalesce(col("nd"), col("dist"))).as("dist"),
           (col("dist").isNull ||
-            (col("nd").isNotNull && col("nd") < col("dist"))).as("improved"))
-        .observe(obs, sum(when(col("improved"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint(true)
-      changed = obs.get.get("n") match { case Some(l: Long) => l; case _ => 0L }
+            (col("nd").isNotNull && col("nd") < col("dist"))).as("improved")),
+        sum(when(col("improved"), 1L).otherwise(0L)).as("n"))
+      state = o.df
+      changed = o.long("n")
       rounds += 1
     }
     (state.select(col("id"), col("dist")), rounds)

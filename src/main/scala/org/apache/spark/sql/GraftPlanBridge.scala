@@ -17,6 +17,9 @@ import org.apache.spark.sql.execution.LogicalRDD
  * Long.MaxValue after each checkpoint keeps every subsequent product tiny
  * while staying far above any threshold that could trigger an unwanted
  * broadcast.
+ *
+ * Its only caller is [[graft.exec.Materialize]], which owns the policy
+ * for materializing a round; operators call `Materialize`, not this.
  */
 object GraftPlanBridge {
 

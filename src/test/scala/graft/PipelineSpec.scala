@@ -139,6 +139,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(ann.size == brute.size) // buckets are big enough to fill k
   }
 
+  test("ann_topk builds its bucket index inside the query, never on disk") {
+    val idx = new java.io.File("target/graft-annidx")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm))
+      f.delete()
+    }
+    rm(idx)
+    // a fresh session: no memo entry from an earlier spec in this JVM
+    val rows = SparkEntry.queries("ann_topk")(spark.newSession(), dir).count()
+    assert(rows == 50, s"ann_topk rows: $rows")
+    assert(!idx.exists(), s"ann_topk wrote an index to $idx")
+  }
+
   test("text analysis: token counts, quality, langid, fingerprint") {
     val tc = TextAnalysis.tokenCounts(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

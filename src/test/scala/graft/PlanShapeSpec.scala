@@ -58,6 +58,27 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(parts.groupBy("part").count().count() == 2)
   }
 
+  test("observed metrics and the capped checkpoint live only in graft.exec") {
+    // every round's observed count goes through graft.exec.Materialize
+    // (auto-named, a missing key throws); no operator hand-rolls it
+    import scala.jdk.CollectionConverters._
+    val exec = java.nio.file.Paths.get("src/main/scala/graft/exec")
+    val bridge = "GraftPlanBridge.scala"
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.startsWith(exec)).toList
+    assert(files.size > 40, s"source walk found only ${files.size} files")
+    for (f <- files) {
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      for (banned <- Seq("Observation(", ".observe(", "def ck("))
+        assert(!src.contains(banned),
+          s"$f contains `$banned` — use graft.exec.Materialize")
+      if (f.getFileName.toString != bridge)
+        assert(!src.contains("checkpointCapped"),
+          s"$f calls the capped checkpoint directly — use Materialize(df)")
+    }
+  }
+
   test("no driver query plans a cartesian product") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val plan = fn(spark, dir).queryExecution.executedPlan.toString

@@ -41,7 +41,7 @@ object BenchExtra {
           else names
         qs.foreach { n => println(f"EXTRA_Q $n ${timeOne(n)}%.2f") }
       case "explain" :: tag :: names =>
-        val dir = new java.io.File("/root/repo/plans/r06")
+        val dir = new java.io.File("plans/r06")
         dir.mkdirs()
         names.foreach { n =>
           val df = SparkEntry.queries(n)(spark, sfDir)

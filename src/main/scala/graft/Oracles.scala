@@ -308,7 +308,7 @@ object Oracles {
 
   /** `rounds` unrolled Boruvka rounds over the weighted undirected
     * fixture, each with `jumps` unrolled pointer jumps (mirrors
-    * graft.operators.Boruvka.fixedRounds step for step): the spanning
+    * graft.operators.Boruvka.run step for step): the spanning
     * forest edges picked so far. */
   def mst(rounds: Int, jumps: Int = 12): String = {
     val perRound = (1 to rounds).map { i =>

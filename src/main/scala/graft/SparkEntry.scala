@@ -207,7 +207,7 @@ object SparkEntry {
     "bfs_4" -> ((s, d) => {
       val adj = adjDir(s, d)
       val src = adj.vertices.agg(min("id")).first().getLong(0)
-      Bfs.fixedRounds(adj, src, 4).orderBy("id")
+      Bfs.run(adj, src, 4)._1.orderBy("id")
     }),
     // gr2sortedbfsgr: BFS-traversal-order relabel (20 rounds >> diameter
     // at driver scales, like the CC oracle's unroll)
@@ -218,20 +218,20 @@ object SparkEntry {
     }),
     // k-core peel over the symmetric graph (SURVEY §2.6), 10 fixed rounds
     "kcore_8" -> ((s, d) =>
-      KCore.fixedRounds(symE(s, d), 8, 10).orderBy("id")),
+      KCore.run(symE(s, d), 8, 10)._1.orderBy("id")),
     // deterministic Luby maximal-independent-set rounds (SURVEY §2.6)
     "mis_3" -> ((s, d) =>
-      IndependentSet.fixedRounds(symE(s, d), 3).orderBy("id")),
+      IndependentSet.run(symE(s, d), 3)._1.orderBy("id")),
     // k-truss support peel (SURVEY §2.6), 2 fixed rounds at trussNum 4,
     // sharing the suite's one orientation + triangle listing
     "ktruss_4" -> ((s, d) =>
-      KTruss.fixedRounds(edgesE(s, d), 4, 2,
-        Some((orientedE(s, d), triListE(s, d))))
+      KTruss.run(edgesE(s, d), 4, 2,
+        Some((orientedE(s, d), triListE(s, d))))._1
         .orderBy("src", "dst")),
     // deterministic greedy maximal matching (SURVEY §2.6), 3 rounds
     "matching_3" -> ((s, d) =>
-      Matching.fixedRoundsOriented(
-        symE(s, d).filter(col("src") < col("dst")), 3)
+      Matching.runOriented(
+        symE(s, d).filter(col("src") < col("dst")), 3)._1
         .orderBy("src", "dst")),
     // weighted SSSP / Bellman-Ford rounds (SURVEY §2.6), synthetic weights
     "sssp_4" -> ((s, d) => {
@@ -332,9 +332,9 @@ object SparkEntry {
     // weightedUndirected(e) ≡ attachWeights(orientUpper(e)) — ride the
     // symmetrize memo for the upper orientation
     "mst_2" -> ((s, d) =>
-      Boruvka.fixedRounds(
+      Boruvka.run(
         GraphOps.attachWeights(symE(s, d).filter(col("src") < col("dst"))),
-        2, 12).orderBy("src", "dst")),
+        2, 12)._1.orderBy("src", "dst")),
     // Brandes betweenness (SURVEY §2.6): 4 smallest ids as sources,
     // 6-level BFS horizon, bc scaled to int64 nano-units
     "betweenness_4x6" -> ((s, d) => {

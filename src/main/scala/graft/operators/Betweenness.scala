@@ -34,7 +34,7 @@ object Betweenness {
     * (empty frontier ⇒ empty candidate set ⇒ unchanged state), so the
     * loop exits early — the observe rides the materializing pass, and
     * the result still equals the full maxLevels unroll the SQL oracle
-    * runs (the same argument as Bfs.fixedRounds). */
+    * runs (the same argument as Bfs.run). */
   private[operators] def forward(adj: Adjacency, sources: Seq[Long],
       maxLevels: Int): (DataFrame, Int) = {
     val spark = adj.blocks.sparkSession

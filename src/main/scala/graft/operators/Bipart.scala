@@ -51,8 +51,8 @@ object Bipart {
   def coarsenLevel(edges: DataFrame, vw: DataFrame, matchRounds: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     // `edges` is upper-canonical by construction — skip re-orientation
-    val matched = Matching.fixedRoundsOriented(edges.select("src", "dst"),
-      matchRounds).localCheckpoint(true)
+    val matched = Matching.runOriented(edges.select("src", "dst"),
+      matchRounds)._1.localCheckpoint(true)
     val map = vw.select(col("id"))
       .join(matched.select(col("dst").as("id"), col("src").as("rep")),
         Seq("id"), "left")
@@ -237,7 +237,7 @@ object Bipart {
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
     val matchedF = Future {
-      Matching.fixedRoundsOriented(pe.select("src", "dst"), matchRounds)
+      Matching.runOriented(pe.select("src", "dst"), matchRounds)._1
         .localCheckpoint(true)
     }
     val symF = Future {

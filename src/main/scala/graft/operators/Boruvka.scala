@@ -47,10 +47,8 @@ object Boruvka {
 
   /** One Boruvka round over labeled cross edges: (picked forest edges,
     * root mapping c → p covering every component with a cross edge).
-    * `jumpRounds` pointer jumps if Some(n) (the fixed deterministic
-    * kernel), else jump until stable. */
-  private def round(x: DataFrame, jumpRounds: Option[Int])
-      : (DataFrame, DataFrame) = {
+    * Pointer jumps run until stable, at most `jumps` of them. */
+  private def round(x: DataFrame, jumps: Int): (DataFrame, DataFrame) = {
     // both sides' components as candidate owners of the edge; the struct
     // min is decided by (w, src, dst) — unique per edge — with `other`
     // riding along for the hook step
@@ -76,14 +74,14 @@ object Boruvka {
         when(col("qp") === col("c") && col("c") < col("other"), col("c"))
           .otherwise(col("other")).as("p")))
 
-    // pointer jump p' = p[p] until stable, bounded by `jumpRounds` when
-    // set. Roots self-map, so once stable every further jump is a no-op —
+    // pointer jump p' = p[p] until stable, bounded by `jumps`. Roots
+    // self-map, so once stable every further jump is a no-op —
     // stopping early yields EXACTLY the fixed-round result as long as the
     // bound covers log2(#components), while skipping the no-op actions
     // (the SQL oracle unrolls the full fixed count; same fixpoint).
     var moved = 1L
     var j = 0
-    while (moved > 0 && jumpRounds.forall(j < _)) {
+    while (moved > 0 && j < jumps) {
       val pr = p.select(col("c").as("jc"), col("p").as("jp"))
       val o = Materialize.observed(p.join(pr, p("p") === col("jc"))
         .select(col("c"), col("jp").as("p"),
@@ -98,10 +96,10 @@ object Boruvka {
     // was hit while pointers were still moving, the contraction is
     // INCOMPLETE and a later round could admit a cycle edge. Surface it
     // loudly instead of silently breaking the forest invariant —
-    // fixedRounds callers must size `jumps` to cover the longest chain.
-    if (moved > 0 && jumpRounds.nonEmpty) {
+    // callers that bound `jumps` must size it to cover the longest chain.
+    if (moved > 0) {
       System.err.println(s"[graft] Boruvka: pointer-jump bound " +
-        s"${jumpRounds.get} hit with $moved pointers still moving — " +
+        s"$jumps hit with $moved pointers still moving — " +
         "contraction incomplete; increase `jumps`")
     }
     (picked, p)
@@ -111,40 +109,31 @@ object Boruvka {
     Materialize(comp.join(p, comp("comp") === p("c"), "left")
       .select(comp("id"), coalesce(col("p"), comp("comp")).as("comp")))
 
-  /** Exactly `rounds` Boruvka rounds with exactly `jumps` pointer jumps
-    * per round (the SQL-oracle kernel; jumps must cover log2 of the
-    * component count — extra jumps are no-ops): forest edges picked so
-    * far as (src, dst, w). */
-  def fixedRounds(edges: DataFrame, rounds: Int, jumps: Int = 12): DataFrame = {
+  /** At most `maxRounds` Boruvka rounds with at most `jumps` pointer
+    * jumps per round: (forest edges picked so far as (src, dst, w),
+    * rounds run). A drained cross-edge set is a fixpoint: every further
+    * round is the identity, so the loop stops there and the forest is
+    * minimum spanning; a bound below that keeps the oracle's unroll
+    * exact. The oracle unrolls a fixed jump count, so `jumps` must cover
+    * log2 of the component count (extra jumps are no-ops, skipped once
+    * the pointers stop moving). The cross-edge count rides each
+    * materializing pass, the start state's included. */
+  def run(edges: DataFrame, maxRounds: Int = 100,
+      jumps: Int = Int.MaxValue): (DataFrame, Int) = {
     var comp = Materialize(GraphOps.vertices(edges)
       .select(col("id"), col("id").as("comp")))
-    var cur = Materialize(edges.select("src", "dst", "w"))
-    var mst = cur.limit(0)
-    for (_ <- 1 to rounds) {
-      val x = Materialize(cross(cur, comp))
-      val (picked, p) = round(x, Some(jumps))
-      mst = mst.unionAll(picked)
-      comp = translate(comp, p)
-      cur = x.select("src", "dst", "w")
-    }
-    mst
-  }
-
-  /** To the drained cross-edge set: (minimum spanning forest edges,
-    * rounds). Pointer jumps run to fixpoint each round. */
-  def run(edges: DataFrame, maxIter: Int = 100): (DataFrame, Int) = {
-    var comp = Materialize(GraphOps.vertices(edges)
-      .select(col("id"), col("id").as("comp")))
-    var cur = Materialize(edges.select("src", "dst", "w"))
+    val start = Materialize.observed(edges.select("src", "dst", "w"),
+      count(lit(1)).as("n"))
+    var cur = start.df
+    var left = start.long("n")
     var mst = cur.limit(0)
     var rounds = 0
-    var left = cur.count()
-    while (left > 0 && rounds < maxIter) {
+    while (left > 0 && rounds < maxRounds) {
       val o = Materialize.observed(cross(cur, comp), count(lit(1)).as("n"))
       val x = o.df
       left = o.long("n")
       if (left > 0) {
-        val (picked, p) = round(x, None)
+        val (picked, p) = round(x, jumps)
         mst = mst.unionAll(picked)
         comp = translate(comp, p)
         cur = x.select("src", "dst", "w")

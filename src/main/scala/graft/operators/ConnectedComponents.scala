@@ -211,28 +211,6 @@ object ConnectedComponents {
       converged, metrics.toSeq)
   }
 
-  /** Exactly `k` synchronous min-label rounds over all vertices (no frontier
-    * short-cut, no convergence check) — deterministic kernel for SQL-oracle
-    * queries. Semantics per round: comp' = min(comp, min over in-neighbors'
-    * comp along the given edge orientation). */
-  def fixedRounds(adj: Adjacency, k: Int): DataFrame = {
-    var state = adj.vertices.select(col("id"), col("id").as("comp"))
-      .localCheckpoint(true)
-    for (_ <- 1 to k) {
-      val mins = adj.blocks
-        .join(state, adj.blocks("src") === state("id"))
-        .select(explode(col("dsts")).as("id"), col("comp").as("msg"))
-        .groupBy("id").agg(min(col("msg")).as("msg"))
-      val next = state
-        .join(mins, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("msg"), col("comp"))).as("comp"))
-        .localCheckpoint(true)
-      state = next
-    }
-    state
-  }
-
   /** findLargest (ConnectedComponents.cpp:1074-1157): component histogram. */
   def componentSizes(components: DataFrame): DataFrame =
     components.groupBy("comp").agg(count(lit(1)).as("size"))

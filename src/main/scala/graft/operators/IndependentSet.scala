@@ -46,38 +46,22 @@ object IndependentSet {
     (winners, next)
   }
 
-  /** Exactly `rounds` Luby rounds (the SQL-oracle kernel): the set built
-    * so far, (id) rows. Maximality holds once the remaining set drains
-    * (spec-checked via [[run]]); fixed rounds keep the oracle unroll
-    * exact either way. */
-  def fixedRounds(symEdges: DataFrame, rounds: Int): DataFrame = {
+  /** At most `maxRounds` Luby rounds: (the set built so far as (id)
+    * rows, rounds run). A drained remaining set is a fixpoint: every
+    * further round is the identity, so the loop stops there and the set
+    * is maximal (spec-checked); a bound below that keeps the oracle's
+    * unroll exact. The remaining count rides each materializing pass,
+    * the start state's included. */
+  def run(symEdges: DataFrame, maxRounds: Int = 1000): (DataFrame, Int) = {
     val spark = symEdges.sparkSession
     import spark.implicits._
-    var remaining = GraphOps.vertices(symEdges).localCheckpoint(true)
-    var mis = Seq.empty[Long].toDF("id")
-    var drained = false
-    for (_ <- 1 to rounds if !drained) {
-      val (winners, next) = round(symEdges, remaining)
-      mis = mis.unionAll(winners)
-      // a drained remaining set makes every later round a no-op — skip
-      // them (the observe rides the materializing pass; result equals
-      // the full unroll)
-      val o = Materialize.observed(next, count(lit(1)).as("n"))
-      remaining = o.df
-      drained = o.long("n") == 0L
-    }
-    mis
-  }
-
-  /** Luby to a drained remaining set: (the maximal set, rounds). */
-  def run(symEdges: DataFrame, maxIter: Int = 1000): (DataFrame, Int) = {
-    val spark = symEdges.sparkSession
-    import spark.implicits._
-    var remaining = GraphOps.vertices(symEdges).localCheckpoint(true)
-    var left = remaining.count()
+    val start = Materialize.observed(GraphOps.vertices(symEdges),
+      count(lit(1)).as("n"))
+    var remaining = start.df
+    var left = start.long("n")
     var rounds = 0
     var mis = Seq.empty[Long].toDF("id")
-    while (left > 0 && rounds < maxIter) {
+    while (left > 0 && rounds < maxRounds) {
       val (winners, next) = round(symEdges, remaining)
       mis = mis.unionAll(winners)
       val o = Materialize.observed(next, count(lit(1)).as("n"))

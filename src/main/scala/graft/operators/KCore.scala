@@ -27,32 +27,21 @@ object KCore {
       .select("src", "dst")
   }
 
-  /** Exactly `rounds` peel rounds (the SQL-oracle kernel): surviving
-    * (id, deg) in the subgraph after the last round. A round that
-    * removes no edge is a fixpoint — every later round is the identity —
-    * so the loop exits early (observe on the materializing pass, no
-    * extra scan); the result still equals the full k-round unroll. */
-  def fixedRounds(symEdges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var edges = symEdges.localCheckpoint(true)
-    var alive = -1L
-    var done = false
-    for (r <- 1 to rounds if !done) {
-      val o = Materialize.observed(peel(edges, k), count(lit(1)).as("n"))
-      edges = o.df
-      val n = o.long("n")
-      done = n == alive || n == 0L
-      alive = n
-    }
-    edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-  }
-
-  /** Peel to fixpoint: (k-core members (id, deg), rounds). */
-  def run(symEdges: DataFrame, k: Int, maxIter: Int = 10000): (DataFrame, Int) = {
-    var edges = symEdges.localCheckpoint(true)
-    var alive = edges.count()
+  /** Peel at most `maxRounds` rounds: (surviving (id, deg) in the
+    * subgraph after the last round, rounds run). A round that removes no
+    * edge is a fixpoint: every further round is the identity, so the loop
+    * stops there and the result equals the full `maxRounds` unroll (the
+    * SQL oracle's form). The surviving edge count rides each
+    * materializing pass, the start state's included, so a first round
+    * that removes nothing is also the last. */
+  def run(symEdges: DataFrame, k: Int,
+      maxRounds: Int = 10000): (DataFrame, Int) = {
+    val start = Materialize.observed(symEdges, count(lit(1)).as("n"))
+    var edges = start.df
+    var alive = start.long("n")
     var prev = Long.MaxValue
     var rounds = 0
-    while (alive != prev && alive > 0 && rounds < maxIter) {
+    while (alive != prev && alive > 0 && rounds < maxRounds) {
       prev = alive
       val o = Materialize.observed(peel(edges, k), count(lit(1)).as("n"))
       edges = o.df

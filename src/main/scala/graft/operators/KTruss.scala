@@ -151,26 +151,21 @@ object KTruss {
     State(o, initialSupport(tris).localCheckpoint(true), -1L)
   }
 
-  /** Exactly `rounds` support-peel rounds at truss number k (the
-    * SQL-oracle kernel): surviving undirected edges as (src < dst).
-    * `pre` optionally supplies the degree orientation and its triangle
-    * listing when the caller has them materialized already. */
-  def fixedRounds(edges: DataFrame, k: Int, rounds: Int,
-      pre: Option[(DataFrame, DataFrame)] = None): DataFrame = {
+  /** At most `maxRounds` support-peel rounds at truss number k:
+    * (surviving undirected edges as (src < dst), rounds run). A round
+    * that drops no edge is a fixpoint: every further round is the
+    * identity, so the loop stops there and the result equals the full
+    * `maxRounds` unroll (the SQL oracle's form). The last allowed round
+    * skips the support maintenance nothing would read. `pre` optionally
+    * supplies the degree orientation and its triangle listing when the
+    * caller has them materialized already. */
+  def run(edges: DataFrame, k: Int, maxRounds: Int = 1000,
+      pre: Option[(DataFrame, DataFrame)] = None): (DataFrame, Int) = {
     var s = init(edges, pre)
-    for (r <- 1 to rounds) s = peel(s, k, needNext = r < rounds)
-    s.o.select(col("lo").as("src"), col("hi").as("dst"))
-  }
-
-  /** Peel to fixpoint: (maximal k-truss edges as (src < dst), rounds). */
-  def run(edges: DataFrame, k: Int, maxIter: Int = 1000): (DataFrame, Int) = {
-    var s = init(edges, None)
     var rounds = 0
-    var done = false
-    while (!done && rounds < maxIter) {
-      s = peel(s, k, needNext = true)
+    while (s.dropped != 0L && rounds < maxRounds) {
       rounds += 1
-      done = s.dropped == 0L
+      s = peel(s, k, needNext = rounds < maxRounds)
     }
     (s.o.select(col("lo").as("src"), col("hi").as("dst")), rounds)
   }

@@ -56,17 +56,6 @@ object Leiden {
     Louvain.moveRounds(edges, intra, rounds, null)
   }
 
-  /** One Leiden level for the driver query: `moveRounds` Louvain rounds,
-    * then `refineRounds` refinement rounds; returns the refined
-    * assignment (id, community). */
-  def oneLevel(edges: DataFrame, moveRounds: Int,
-      refineRounds: Int): DataFrame = {
-    val w1 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-    val comm = Louvain.localMoveRoundsWeighted(w1, moveRounds)
-      .localCheckpoint(true)
-    refineWeighted(w1, comm, refineRounds)
-  }
-
   /** Two Leiden levels: move r1 + refine rf, aggregate on the REFINED
     * partition, seed the coarse level with the parent communities, move
     * r2 there, project back: (id, community). */
@@ -78,8 +67,7 @@ object Leiden {
   }
 
   /** The coarse half of [[twoLevel]] over precomputed level-1 move +
-    * refinement assignments (shared with [[oneLevel]] by a suite that
-    * runs both). */
+    * refinement assignments. */
   def twoLevelFrom(w1: DataFrame, comm: DataFrame, sub: DataFrame,
       r2: Int): DataFrame = {
     val coarse = Louvain.coarsen(w1, sub)

@@ -51,54 +51,40 @@ object Matching {
     (winners, next)
   }
 
-  /** Exactly `rounds` rounds (the SQL-oracle kernel): matched edges so
-    * far as (src < dst). */
-  def fixedRounds(edges: DataFrame, rounds: Int): DataFrame =
-    fixedRoundsOriented(GraphOps.orientUpper(edges), rounds)
-
-  /** [[fixedRounds]] over an ALREADY upper-canonical duplicate-free edge
-    * set (src < dst, one row per undirected edge) — skips the
-    * symmetrize+dedup exchange for callers (Bipart's coarsening, the
-    * suite) whose input is canonical by construction; orientUpper is the
-    * identity on such input. */
-  def fixedRoundsOriented(upper: DataFrame, rounds: Int): DataFrame = {
+  /** At most `maxRounds` rounds over an upper-canonical duplicate-free
+    * edge set (src < dst, one row per undirected edge): (matched edges as
+    * (src < dst), rounds run). A drained edge set is a fixpoint: every
+    * further round is the identity, so the loop stops there and the
+    * matching is maximal; a bound below that keeps the oracle's unroll
+    * exact. The remaining count rides each materializing pass, the start
+    * state's included; after the last allowed round nothing consumes the
+    * remaining set, so that materialization is skipped. Callers whose
+    * input is canonical by construction (Bipart's coarsening, the suite)
+    * skip [[run]]'s symmetrize+dedup exchange. */
+  def runOriented(upper: DataFrame, maxRounds: Int): (DataFrame, Int) = {
     val spark = upper.sparkSession
     import spark.implicits._
-    var remaining = upper.select("src", "dst").localCheckpoint(true)
-    var matched = Seq.empty[(Long, Long)].toDF("src", "dst")
-    var drained = false
-    for (r <- 1 to rounds if !drained) {
-      val (winners, next) = round(remaining)
-      matched = matched.unionAll(winners)
-      // rounds over a drained edge set are no-ops — skip them (observe
-      // rides the materializing pass; result equals the full unroll).
-      // After the FINAL round nothing consumes `remaining` — skip that
-      // materialization outright.
-      if (r < rounds) {
-        val o = Materialize.observed(next, count(lit(1)).as("n"))
-        remaining = o.df
-        drained = o.long("n") == 0L
-      }
-    }
-    matched
-  }
-
-  /** To a drained edge set: (the maximal matching, rounds). */
-  def run(edges: DataFrame, maxIter: Int = 1000): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var remaining = GraphOps.orientUpper(edges).localCheckpoint(true)
-    var left = remaining.count()
+    val start = Materialize.observed(upper.select("src", "dst"),
+      count(lit(1)).as("n"))
+    var remaining = start.df
+    var left = start.long("n")
     var rounds = 0
     var matched = Seq.empty[(Long, Long)].toDF("src", "dst")
-    while (left > 0 && rounds < maxIter) {
+    while (left > 0 && rounds < maxRounds) {
       val (winners, next) = round(remaining)
       matched = matched.unionAll(winners)
-      val o = Materialize.observed(next, count(lit(1)).as("n"))
-      remaining = o.df
-      left = o.long("n")
       rounds += 1
+      if (rounds < maxRounds) {
+        val o = Materialize.observed(next, count(lit(1)).as("n"))
+        remaining = o.df
+        left = o.long("n")
+      }
     }
     (matched, rounds)
   }
+
+  /** [[runOriented]] over any edge table (either orientation,
+    * duplicates allowed). */
+  def run(edges: DataFrame, maxRounds: Int = 1000): (DataFrame, Int) =
+    runOriented(GraphOps.orientUpper(edges), maxRounds)
 }

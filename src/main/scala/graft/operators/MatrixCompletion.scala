@@ -122,8 +122,4 @@ object MatrixCompletion {
     rat.unpersist()
     (uf, vf, sse.toSeq)
   }
-
-  /** Driver-query form: user factors after `rounds` rounds, (u, f0..f3). */
-  def userFactors(ratings: DataFrame, rounds: Int): DataFrame =
-    run(ratings, rounds)._1.withColumnRenamed("id", "u")
 }

@@ -166,12 +166,14 @@ object PageRank {
     val metrics = ArrayBuffer.empty[IterMetric]
     val resumed = if (resume) store.flatMap(_.latest("pagerank_push")) else None
     var iter = resumed.map(_._1).getOrElse(0)
-    var state = resumed.map(_._2).getOrElse(
+    // the frontier size rides every materializing pass, the start
+    // state's included
+    val frontierN = sum(when(col("residual") > tol, 1L).otherwise(0L))
+    val start = Materialize.observed(resumed.map(_._2).getOrElse(
       adj.vertices.select(col("id"), lit(0.0).as("value"),
-        lit(1.0 - alpha).as("residual")))
-      .localCheckpoint(true)
-
-    var frontierSize = state.filter(col("residual") > tol).count()
+        lit(1.0 - alpha).as("residual"))), frontierN.as("f"))
+    var state = start.df
+    var frontierSize = start.long("f")
     var converged = frontierSize == 0L
 
     while (!converged && iter < maxIter) {
@@ -186,21 +188,19 @@ object PageRank {
         .groupBy("id").agg(sum(col("d")).as("dsum"))
 
       val active = col("residual") > tol
-      var next = state
+      val o = Materialize.observed(state
         .join(deltas, Seq("id"), "left")
         .select(
           col("id"),
           (col("value") + when(active, col("residual")).otherwise(lit(0.0)))
             .as("value"),
           (when(active, lit(0.0)).otherwise(col("residual"))
-            + coalesce(col("dsum"), lit(0.0))).as("residual"))
-        .localCheckpoint(true)
+            + coalesce(col("dsum"), lit(0.0))).as("residual")),
+        frontierN.as("f"), sum(col("residual")).as("res_l1"))
 
-      val row = next.agg(
-        sum(when(col("residual") > tol, 1L).otherwise(0L)),
-        sum(col("residual"))).first()
-      frontierSize = row.getLong(0)
-      val l1 = row.getDouble(1)
+      var next = o.df
+      frontierSize = o.long("f")
+      val l1 = o.double("res_l1")
 
       iter += 1
       val ms = (System.nanoTime() - t0) / 1000000
@@ -259,20 +259,21 @@ object PageRank {
       if (resume) store.flatMap(_.latest("pagerank_residual")) else None
     var iter = resumed.map(_._1).getOrElse(0)
     val outdeg = adj.blocks.groupBy("src").agg(first(col("deg")).as("odeg"))
-    var state = resumed.map(_._2).getOrElse(
-      adj.vertices.join(outdeg, adj.vertices("id") === outdeg("src"), "left")
-        .select(col("id"), coalesce(col("odeg"), lit(0L)).as("deg"),
-          lit(0.0).as("value"), lit(1.0 - alpha).as("residual")))
-      .localCheckpoint(true)
-
     // reference accum: this round's activations with out-edges — a
     // function of the state BEFORE the round, so each round's observe
-    // yields the NEXT round's value. The reference breaks AFTER running
-    // the round whose accum is 0 (that round still flushes dangling
-    // activations), so the test below uses the accum of the round being
-    // entered, not the one just produced.
-    var nextAccum = state.filter(col("residual") > tol && col("deg") > 0)
-      .count()
+    // (the start state's included) yields the NEXT round's value. The
+    // reference breaks AFTER running the round whose accum is 0 (that
+    // round still flushes dangling activations), so the test below uses
+    // the accum of the round being entered, not the one just produced.
+    val accum = sum(when(col("residual") > tol && col("deg") > 0, 1L)
+      .otherwise(0L))
+    val start = Materialize.observed(resumed.map(_._2).getOrElse(
+      adj.vertices.join(outdeg, adj.vertices("id") === outdeg("src"), "left")
+        .select(col("id"), coalesce(col("odeg"), lit(0L)).as("deg"),
+          lit(0.0).as("value"), lit(1.0 - alpha).as("residual"))),
+      accum.as("accum"))
+    var state = start.df
+    var nextAccum = start.long("accum")
     var converged = false
 
     while (!converged && iter < maxIter) {
@@ -295,9 +296,7 @@ object PageRank {
           when(col("dsum") > 0, col("dsum"))
             .otherwise(when(active, lit(0.0)).otherwise(col("residual")))
             .as("residual")),
-        sum(when(col("residual") > tol && col("deg") > 0, 1L)
-          .otherwise(0L)).as("accum"),
-        sum(col("residual")).as("res_l1"))
+        accum.as("accum"), sum(col("residual")).as("res_l1"))
 
       var next = o.df
       nextAccum = o.long("accum")

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.regex.Pattern
 
@@ -25,7 +27,8 @@ import java.util.regex.Pattern
  * snapshot-manifest pattern of Iceberg without the runtime dependency.
  * A commit is one Spark job, the write: the lineage comes from the part
  * files' Parquet footers (one file per write task), read on the driver, and
- * the re-read takes the state's schema, so nothing is inferred.
+ * the re-read takes the state's schema, so nothing is inferred; `latest`
+ * takes the schema from a footer and runs no job.
  */
 final class SnapshotStore(val root: String, spark: SparkSession) {
 
@@ -46,15 +49,11 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     val path = dataPath(algo, step)
     state.write.mode("overwrite").parquet(path)
 
-    val conf = spark.sparkContext.hadoopConfiguration
-    val partRows = new Path(path).getFileSystem(conf).listStatus(new Path(path))
-      .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      .map { f =>
-        val footer = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        val rows = try footer.getRecordCount finally footer.close()
-        val part = f.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt
-        s"""{"partition":$part,"rows":$rows}"""
-      }.mkString("[", ",", "]")
+    val partRows = partFiles(path).map { f =>
+      val rows = footer(f)(_.getRecordCount)
+      val part = f.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt
+      s"""{"partition":$part,"rows":$rows}"""
+    }.mkString("[", ",", "]")
 
     val manifest =
       s"""{"algo":"$algo","superstep":$step,"path":"$path","committed_at_ms":${System.currentTimeMillis()},"partition_lineage":$partRows}"""
@@ -65,7 +64,22 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
     spark.read.schema(state.schema).parquet(path)
   }
 
-  /** Latest committed snapshot for `algo`, if any — the resume point. */
+  private def conf = spark.sparkContext.hadoopConfiguration
+
+  /** The written part files of a snapshot directory, in name order. */
+  private def partFiles(path: String): Array[Path] =
+    new Path(path).getFileSystem(conf).listStatus(new Path(path))
+      .map(_.getPath).filter(_.getName.startsWith("part-")).sortBy(_.getName)
+
+  /** Reads one part file's Parquet footer here, without a Spark job. */
+  private def footer[T](f: Path)(read: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+    try read(r) finally r.close()
+  }
+
+  /** Latest committed snapshot for `algo`, if any — the resume point. Its
+    * schema is the one Spark writes into each part file's footer, read
+    * here, so resuming runs no Spark job. */
   def latest(algo: String): Option[(Int, DataFrame)] = {
     if (!Files.isDirectory(snapDir)) return None
     // exact: a prefix test would give algo `x` the manifests of `x-y`
@@ -76,8 +90,12 @@ final class SnapshotStore(val root: String, spark: SparkSession) {
       val m = manifest.matcher(names.next().getFileName.toString)
       if (m.matches()) best = math.max(best, m.group(1).toInt)
     }
-    if (best < 0) None
-    else Some((best, spark.read.parquet(dataPath(algo, best))))
+    if (best < 0) return None
+    val path = dataPath(algo, best)
+    val schema = footer(partFiles(path).head)(_.getFooter.getFileMetaData
+      .getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+    Some((best, spark.read.schema(DataType.fromJson(schema)
+      .asInstanceOf[StructType]).parquet(path)))
   }
 
   /** Append one superstep's metrics (the reference's -statFile CSV,

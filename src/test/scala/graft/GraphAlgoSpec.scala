@@ -55,7 +55,8 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("cc fixedRounds(k) matches k synchronous oracle rounds") {
-    val engine = labelMap(ConnectedComponents.fixedRounds(symAdj, 3))
+    // CC's k-round form was this recurrence with `comp` for `label`
+    val engine = labelMap(LabelPropagation.runMin(symAdj, 3))
     val oracle = TestOracles.lpaMin(symEdgeArray, vertexIds, 3)
     assert(engine == oracle)
   }
@@ -379,9 +380,19 @@ class GraphAlgoSpec extends AnyFunSuite {
     // hand BFS from 1 over the directed edges above
     assert(got == Map(1L -> 0L, 2L -> 1L, 6L -> 1L, 3L -> 2L, 4L -> 2L,
       5L -> 3L))
-    assert(rounds <= 5)
-    val fixed = labelMap(Bfs.fixedRounds(adj, 1L, 10))
+    assert(rounds == 4)
+    val fixed = labelMap(Bfs.run(adj, 1L, 10)._1)
     assert(fixed == got)
+    adj.unpersist()
+  }
+
+  test("BFS bounded below the fixpoint equals a hand k-round result") {
+    // path 1 -> 2 -> 3 -> 4 -> 5: one new vertex per round
+    val adj = Adjacency.build(GraphOps.clean(df(Seq((1L, 2L), (2L, 3L),
+      (3L, 4L), (4L, 5L)))))
+    val (reached, rounds) = Bfs.run(adj, 1L, 2)
+    assert(labelMap(reached) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
+    assert(rounds == 2)
     adj.unpersist()
   }
 
@@ -392,10 +403,26 @@ class GraphAlgoSpec extends AnyFunSuite {
     val (core, rounds) = KCore.run(e, k = 2)
     val got = labelMap(core)
     assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
-    assert(rounds <= 4)
-    assert(labelMap(KCore.fixedRounds(e, 2, 10)) == got)
+    assert(rounds == 3)
+    assert(labelMap(KCore.run(e, 2, 10)._1) == got)
     // k higher than any degree empties the graph
-    assert(KCore.run(e, k = 10)._1.isEmpty)
+    val (none, r10) = KCore.run(e, k = 10)
+    assert(none.isEmpty)
+    assert(r10 == 1)
+  }
+
+  test("k-core bounded below the fixpoint equals a hand k-round result") {
+    // triangle {1,2,3} + tail 3-4-5-6-7: the 2-core peels one tail
+    // vertex per round (7, then 6, ...) and reaches its fixpoint in 5
+    val e = GraphOps.symmetrize(df(Seq((1L, 2L), (2L, 3L), (1L, 3L),
+      (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L))))
+    val (two, rounds) = KCore.run(e, 2, 2)
+    assert(labelMap(two) ==
+      Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 5L -> 1L))
+    assert(rounds == 2)
+    val (core, all) = KCore.run(e, k = 2)
+    assert(labelMap(core) == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    assert(all == 5)
   }
 
   test("SSSP Bellman-Ford matches a hand shortest-path oracle") {
@@ -427,9 +454,9 @@ class GraphAlgoSpec extends AnyFunSuite {
       assert(adjPairs.exists { case (a, b) => a == v && set(b) },
         s"$v has no MIS neighbor")
     }
-    assert(rounds <= 5)
-    // fixed-rounds prefix at saturation equals the fixpoint set
-    val fixed = IndependentSet.fixedRounds(e, 6).collect()
+    assert(rounds == 1)
+    // bounded run at saturation equals the fixpoint set
+    val fixed = IndependentSet.run(e, 6)._1.collect()
       .map(_.getLong(0)).toSet
     assert(fixed == set)
   }
@@ -448,8 +475,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     und.foreach { case (a, b) =>
       assert(matchedV(a) || matchedV(b), s"edge ($a,$b) unmatched")
     }
-    assert(rounds <= 5)
-    assert(Matching.fixedRounds(e, 6).collect()
+    assert(rounds == 3)
+    assert(Matching.run(e, 6)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == pairs)
   }
 
@@ -486,17 +513,20 @@ class GraphAlgoSpec extends AnyFunSuite {
     // after the pendant and cross-checks)
     val e = df(Seq((1L, 2L), (2L, 3L), (1L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L)))
-    val (t3, _) = KTruss.run(e, k = 3)
+    val (t3, r3) = KTruss.run(e, k = 3)
+    assert(r3 == 2)
     val got3 = t3.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got3 == Set((1L, 2L), (2L, 3L), (1L, 3L), (2L, 4L), (3L, 4L)))
-    val (t4, _) = KTruss.run(e, k = 4)
+    val (t4, r4) = KTruss.run(e, k = 4)
     assert(t4.isEmpty)
-    assert(KTruss.fixedRounds(e, 3, 5).collect()
+    assert(r4 == 3)
+    assert(KTruss.run(e, 3, 5)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == got3)
     // k <= 2: sup >= k-2 holds at support 0, so the 2-truss is the WHOLE
     // graph — zero-support edges (the pendant) must survive the peel
     val all = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (t2, _) = KTruss.run(e, k = 2)
+    val (t2, r2) = KTruss.run(e, k = 2)
+    assert(r2 == 1)
     assert(t2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == all)
   }
 
@@ -614,9 +644,9 @@ class GraphAlgoSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val want = kruskal(es)
       assert(got == want, s"trial $trial: ${got.size} vs ${want.size}")
-      assert(rounds <= 10)
-      // fixed-round kernel at saturation equals the fixpoint
-      val fr = Boruvka.fixedRounds(edf, 8, 12).collect()
+      assert(rounds == Seq(3, 3, 4)(trial))
+      // bounded run (8 rounds, 12 jumps) at saturation equals the fixpoint
+      val fr = Boruvka.run(edf, 8, 12)._1.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(fr == want)
     }

@@ -119,4 +119,41 @@ class ResumeSpec extends AnyFunSuite {
     assert(store.latest("x").get._2.collect().head.getDouble(1) == 0.3)
     assert(store.latest("y").isEmpty)
   }
+
+  test("latest runs no Spark job and keeps the committed schema") {
+    val store = new SnapshotStore(tmp(), spark)
+    val committed = store.commitState("s", 5, spark.range(0, 20, 1, 2)
+      .selectExpr("id", "id % 3 AS comp", "id * 0.5 AS value",
+        "id % 2 = 0 AS changed"))
+    // the listener sees every job in order: once it has seen the
+    // sentinel job started after `latest`, it has seen any job of `latest`
+    val key = "graft.spec.phase"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLocalProperty(key, "latest")
+      val (step, resumed) = store.latest("s").get
+      val schema = resumed.schema
+      spark.sparkContext.setLocalProperty(key, "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains("sentinel"))
+      assert(!seen.contains("latest"), "latest ran a Spark job")
+      assert(step == 5)
+      assert(schema == committed.schema)
+      assert(resumed.orderBy("id").collect().toSeq ==
+        committed.orderBy("id").collect().toSeq)
+    } finally {
+      spark.sparkContext.setLocalProperty(key, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }

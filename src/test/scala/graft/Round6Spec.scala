@@ -38,9 +38,9 @@ class Round6Spec extends AnyFunSuite {
 
   test("matching over pre-oriented canonical edges == generic path") {
     val upper = GraphOps.orientUpper(df(randEdges))
-    val a = Matching.fixedRounds(df(randEdges), 3).collect()
+    val a = Matching.run(df(randEdges), 3)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Matching.fixedRoundsOriented(upper, 3).collect()
+    val b = Matching.runOriented(upper, 3)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
   }

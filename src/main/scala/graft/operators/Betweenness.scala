@@ -40,7 +40,7 @@ object Betweenness {
     val spark = adj.blocks.sparkSession
     import spark.implicits._
     var state = sources.map(q => (q, q, 0, 1L))
-      .toDF("q", "id", "dist", "sigma").localCheckpoint(true)
+      .toDF("q", "id", "dist", "sigma").transform(Materialize(_))
     var deepest = 0
     var exhausted = false
     for (r <- 1 to maxLevels if !exhausted) {
@@ -97,7 +97,7 @@ object Betweenness {
             .as("c"))
         .groupBy(col("q"), col("v").as("id"))
         .agg(sum(col("c")).as("delta"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       delta = lvl
       // LAZY fold: every lvl frame is already checkpointed, so chaining
       // the per-level union + grouped sum costs nothing until the final

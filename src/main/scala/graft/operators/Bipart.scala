@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.{Materialize, Par}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,12 +53,12 @@ object Bipart {
       : (DataFrame, DataFrame, DataFrame) = {
     // `edges` is upper-canonical by construction — skip re-orientation
     val matched = Matching.runOriented(edges.select("src", "dst"),
-      matchRounds)._1.localCheckpoint(true)
+      matchRounds)._1.transform(Materialize(_))
     val map = vw.select(col("id"))
       .join(matched.select(col("dst").as("id"), col("src").as("rep")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("rep"), col("id")).as("rep"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val ec = edges
       .join(map.withColumnRenamed("id", "src")
         .withColumnRenamed("rep", "r1"), "src")
@@ -105,7 +106,7 @@ object Bipart {
     val slack = if (slackNum < 0) 0L else slackNum / 2
     val cand = gains.filter(col("part") === srcPart && col("gain") > 0)
       .join(vw, "id").select(col("id"), col("gain"), col("wt"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // INDEPENDENT movers only: drop any candidate with a higher-priority
     // ((gain desc, id asc)) adjacent candidate. Movers are then pairwise
     // non-adjacent, so Δcut = −Σ gain < 0 — each round strictly improves
@@ -134,11 +135,9 @@ object Bipart {
   /** `rounds` alternating refinement rounds (odd 0→1, even 1→0). */
   def refine(sym: DataFrame, vw: DataFrame, parts0: DataFrame,
       rounds: Int): DataFrame = {
-    var parts = parts0.localCheckpoint(true)
-    for (r <- 1 to rounds) {
-      parts = refineRound(sym, vw, parts, if (r % 2 == 1) 0L else 1L)
-        .localCheckpoint(true)
-    }
+    var parts = Materialize(parts0)
+    for (r <- 1 to rounds)
+      parts = Materialize(refineRound(sym, vw, parts, if (r % 2 == 1) 0L else 1L))
     parts
   }
 
@@ -155,22 +154,18 @@ object Bipart {
     * skip the symmetrize+dedup exchange. */
   def bisectUpper(upper: DataFrame, coarsenLevels: Int = 1,
       matchRounds: Int = 2, refineRounds: Int = 2): DataFrame = {
-    var cur = upper
-      .select(col("src"), col("dst"), lit(1L).as("w"))
-      .localCheckpoint(true)
+    var cur = Materialize(upper.select(col("src"), col("dst"), lit(1L).as("w")))
     var vw = GraphOps.vertices(cur).distinct()
-      .select(col("id"), lit(1L).as("wt")).localCheckpoint(true)
+      .select(col("id"), lit(1L).as("wt")).transform(Materialize(_))
     // coarsen chain, keeping each level for the way back up
     val levels = scala.collection.mutable.ArrayBuffer
       .empty[(DataFrame, DataFrame, DataFrame)] // (edges, vw, map down)
     for (_ <- 1 to coarsenLevels) {
       val (e2, v2, m) = coarsenLevel(cur, vw, matchRounds)
-      val e2c = e2.localCheckpoint(true)
-      val v2c = v2.localCheckpoint(true)
       levels += ((cur, vw, m))
-      cur = e2c; vw = v2c
+      cur = Materialize(e2); vw = Materialize(v2)
     }
-    var parts = initialSplit(vw).localCheckpoint(true)
+    var parts = Materialize(initialSplit(vw))
     // uncoarsen: project through each map, refine on the finer level
     for ((fineEdges, fineVw, map) <- levels.reverse) {
       val projected = map
@@ -202,16 +197,13 @@ object Bipart {
   /** [[kway]] over an already upper-canonical edge set. */
   def kwayUpper(upper: DataFrame, depth: Int, matchRounds: Int = 2,
       refineRounds: Int = 2): DataFrame = {
-    val canon = upper
-      .select(col("src"), col("dst"), lit(1L).as("w"))
-      .localCheckpoint(true)
+    val canon = Materialize(upper.select(col("src"), col("dst"), lit(1L).as("w")))
     val vw0 = GraphOps.vertices(canon).distinct()
-      .select(col("id"), lit(1L).as("wt")).localCheckpoint(true)
-    var parts = vw0.select(col("id"), lit(0L).as("part"))
-      .localCheckpoint(true)
+      .select(col("id"), lit(1L).as("wt")).transform(Materialize(_))
+    var parts = Materialize(vw0.select(col("id"), lit(0L).as("part")))
     for (_ <- 1 to depth)
       parts = splitLevel(canon, vw0, parts, matchRounds, refineRounds)
-        .localCheckpoint(true)
+        .transform(Materialize(_))
     parts
   }
 
@@ -225,35 +217,23 @@ object Bipart {
       .join(parts.select(col("id").as("dst"), col("part").as("pd")), "dst")
       .filter(col("ps") === col("pd"))
       .select(col("src"), col("dst"), col("w"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // one coarsening level; matches never cross parts (their edges were
     // filtered out), so reps stay inside their part. The matching rounds
     // and the refinement's symmetrized edge frame are independent
     // dataflows over the checkpointed pe — build them concurrently
     // (guide §2.6).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val matchedF = Future {
-      Matching.runOriented(pe.select("src", "dst"), matchRounds)._1
-        .localCheckpoint(true)
-    }
-    val symF = Future {
-      pe.unionByName(pe.select(col("dst").as("src"),
-        col("src").as("dst"), col("w"))).localCheckpoint(true)
-    }
-    val (matched, sym) =
-      try (Await.result(matchedF, Duration.Inf),
-        Await.result(symF, Duration.Inf))
-      finally pool.shutdown()
+    val (matched, sym) = Par.both(
+      Materialize(Matching.runOriented(pe.select("src", "dst"),
+        matchRounds)._1),
+      Materialize(pe.unionByName(pe.select(col("dst").as("src"),
+        col("src").as("dst"), col("w")))))
     val map = parts
       .join(matched.select(col("dst").as("id"), col("src").as("rep")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("rep"), col("id")).as("rep"),
         col("part").as("grp"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val vwc = vw.join(map, "id")
       .groupBy(col("rep").as("id"), col("grp"))
       .agg(sum(col("wt")).as("wt"))
@@ -268,11 +248,11 @@ object Bipart {
             .otherwise(1L)).as("part"))
     var cur = map.join(p0c, Seq("rep", "grp"))
       .select(col("id"), col("part"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // grouped refinement at the fine level (sym prebuilt above)
     for (r <- 1 to refineRounds)
       cur = refineRoundGrouped(sym, vw, cur, if (r % 2 == 1) 0L else 1L)
-        .localCheckpoint(true)
+        .transform(Materialize(_))
     cur
   }
 
@@ -307,7 +287,7 @@ object Bipart {
       .join(vw, "id")
       .select(col("id"), col("part"), col("gain"), col("wt"),
         (col("part") / 2).cast("long").as("grp"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // priority-independent movers within each pair (cross-pair adjacency
     // cannot change a within-pair gain, so only same-pair neighbours
     // block)

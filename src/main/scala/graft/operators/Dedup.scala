@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import graft.functions.Hashes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -78,7 +79,7 @@ object Dedup {
     // of the verify probe and the size lookups — materialize it once
     // instead of re-deriving shingles 6x from the raw text.
     val inv = base.select(col("doc_id"), col("nsh"), explode(col("sh")).as("s"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val dfs = inv.groupBy("s").agg(count(lit(1)).as("df"))
     // per-doc window: groups are ≤ a few hundred shingles, never skewed
     val wDoc = Window.partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)
@@ -87,7 +88,7 @@ object Dedup {
       .withColumn("pos", row_number().over(wDoc))
       .filter(col("pos") <= expr(s"nsh - ((nsh * $t4 + 9999) DIV 10000) + 1"))
       .select(col("s"), col("doc_id"))
-      .localCheckpoint(true) // joined against itself below
+      .transform(Materialize(_)) // joined against itself below
     val cand = pref.select(col("s"), col("doc_id").as("a"))
       .join(pref.select(col("s"), col("doc_id").as("b")), "s")
       .filter(col("a") < col("b"))
@@ -183,9 +184,9 @@ object Dedup {
   def survivorsFixed(docs: DataFrame, pairs: DataFrame, k: Int): DataFrame = {
     val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     var state = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("comp")).localCheckpoint(true)
+      .select(col("id"), col("id").as("comp")).transform(Materialize(_))
     for (_ <- 1 to k) {
       val mins = sym.join(state, sym("src") === state("id"))
         .select(sym("dst").as("id"), col("comp").as("msg"))
@@ -193,7 +194,7 @@ object Dedup {
       state = state.join(mins, Seq("id"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("msg"), col("comp"))).as("comp"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
     }
     docs.select(col("doc_id"))
       .join(state.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")

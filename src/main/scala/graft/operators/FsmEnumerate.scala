@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.{Materialize, Par}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -155,7 +156,7 @@ object FsmEnumerate {
       numLabels: Int = 4): Seq[(Int, Vector[Pattern])] = {
     require(maxEdges >= 1)
     val arcs = GraphOps.symmetrize(GraphOps.clean(edges))
-      .select(col("src").as("x"), col("dst").as("y")).localCheckpoint(true)
+      .select(col("src").as("x"), col("dst").as("y")).transform(Materialize(_))
     def lab(c: Column): Column = shiftright(c, 3) % numLabels
     def labKey(m: Int): Column =
       (0 until m).map(i => lab(col(s"v$i")) *
@@ -165,81 +166,72 @@ object FsmEnumerate {
       Map(e1 -> arcs.select(col("x").as("v0"), col("y").as("v1")))
     val out = Vector.newBuilder[(Int, Vector[Pattern])]
     // Per-shape frame builds and support aggregates are independent
-    // Spark jobs; their eager materializations (localCheckpoint /
+    // Spark jobs; their eager materializations (Materialize /
     // collect) used to serialize behind one driver thread, leaving the
-    // executors idle between jobs. A small bounded pool overlaps them
+    // executors idle between jobs. A 4-wide Par overlaps them
     // (guide §2.6 — submit independent jobs from a thread pool so the
     // next job back-fills the current one's task tail).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      for (level <- 1 to maxEdges) {
-        if (level > 1) {
-          val parents = frames
-          val children = parents.keys.toVector.flatMap(childrenOf).distinct
-          frames = Await.result(Future.sequence(children.map { c => Future {
-            val built = routesFor(c).flatMap { r =>
-              parents.get(r.parent).map { pf =>
-                val mapped = pf.select(
-                  (0 until r.parent.m).map(p =>
-                    col(s"v$p").as(s"v${r.phi(p)}")): _*)
-                val withEdge = r.newPos match {
-                  case Some(nv) =>
-                    val attach =
-                      if (r.newEdge._1 == nv) r.newEdge._2 else r.newEdge._1
-                    val grown = mapped.join(
-                      arcs.select(col("x").as(s"v$attach"),
-                        col("y").as(s"v$nv")), s"v$attach")
-                    (0 until c.m).filterNot(_ == nv).foldLeft(grown) {
-                      (df, i) => df.filter(col(s"v$i") =!= col(s"v$nv"))
-                    }
-                  case None =>
-                    mapped.join(
-                      arcs.select(col("x").as(s"v${r.newEdge._1}"),
-                        col("y").as(s"v${r.newEdge._2}")),
-                      Seq(s"v${r.newEdge._1}", s"v${r.newEdge._2}"))
-                }
-                withEdge.select((0 until c.m).map(i => col(s"v$i")): _*)
+    for (level <- 1 to maxEdges) {
+      if (level > 1) {
+        val parents = frames
+        val children = parents.keys.toVector.flatMap(childrenOf).distinct
+        frames = Par.map(children, 4) { c =>
+          val built = routesFor(c).flatMap { r =>
+            parents.get(r.parent).map { pf =>
+              val mapped = pf.select(
+                (0 until r.parent.m).map(p =>
+                  col(s"v$p").as(s"v${r.phi(p)}")): _*)
+              val withEdge = r.newPos match {
+                case Some(nv) =>
+                  val attach =
+                    if (r.newEdge._1 == nv) r.newEdge._2 else r.newEdge._1
+                  val grown = mapped.join(
+                    arcs.select(col("x").as(s"v$attach"),
+                      col("y").as(s"v$nv")), s"v$attach")
+                  (0 until c.m).filterNot(_ == nv).foldLeft(grown) {
+                    (df, i) => df.filter(col(s"v$i") =!= col(s"v$nv"))
+                  }
+                case None =>
+                  mapped.join(
+                    arcs.select(col("x").as(s"v${r.newEdge._1}"),
+                      col("y").as(s"v${r.newEdge._2}")),
+                    Seq(s"v${r.newEdge._1}", s"v${r.newEdge._2}"))
               }
+              withEdge.select((0 until c.m).map(i => col(s"v$i")): _*)
             }
-            if (built.isEmpty) None
-            else Some(c -> built.reduce(_ unionByName _).distinct()
-              .localCheckpoint(true))
-          }}), Duration.Inf).flatten.toMap
-        }
-        // MNI support per labeled pattern: all automorphic orderings are
-        // in the frame, so per-position distinct counts are the exact
-        // domain sizes
-        val freqKeys: Map[Shape, Vector[Long]] =
-          Await.result(Future.sequence(frames.toVector.map {
-            case (shp, df) => Future {
-              val sup = df.groupBy(labKey(shp.m).as("lk"))
-                .agg(least((0 until shp.m).map(i =>
-                  countDistinct(col(s"v$i"))): _*).as("support"))
-                .filter(col("support") >= minSupport)
-                .select("lk").collect().map(_.getLong(0)).toVector
-              shp -> sup
-            }
-          }), Duration.Inf).toMap
-        // anti-monotone prune: only embeddings of frequent patterns extend
-        frames = frames.flatMap { case (shp, df) =>
-          val keys = freqKeys(shp)
-          if (keys.isEmpty) None
-          else Some(shp -> df.filter(labKey(shp.m).isin(keys: _*)))
-        }
-        val pats = freqKeys.toVector.flatMap { case (shp, keys) =>
-          keys.map { lk =>
-            val labels = Vector.tabulate(shp.m)(i =>
-              (lk / math.pow(numLabels, i).toLong % numLabels).toInt)
-            canonPattern(shp, labels)
           }
-        }.distinct
-        out += level -> pats
+          if (built.isEmpty) None
+          else Some(c -> built.reduce(_ unionByName _).distinct()
+            .transform(Materialize(_)))
+        }.flatten.toMap
       }
-    } finally pool.shutdown()
+      // MNI support per labeled pattern: all automorphic orderings are
+      // in the frame, so per-position distinct counts are the exact
+      // domain sizes
+      val freqKeys: Map[Shape, Vector[Long]] =
+        Par.map(frames.toVector, 4) { case (shp, df) =>
+          val sup = df.groupBy(labKey(shp.m).as("lk"))
+            .agg(least((0 until shp.m).map(i =>
+              countDistinct(col(s"v$i"))): _*).as("support"))
+            .filter(col("support") >= minSupport)
+            .select("lk").collect().map(_.getLong(0)).toVector
+          shp -> sup
+        }.toMap
+      // anti-monotone prune: only embeddings of frequent patterns extend
+      frames = frames.flatMap { case (shp, df) =>
+        val keys = freqKeys(shp)
+        if (keys.isEmpty) None
+        else Some(shp -> df.filter(labKey(shp.m).isin(keys: _*)))
+      }
+      val pats = freqKeys.toVector.flatMap { case (shp, keys) =>
+        keys.map { lk =>
+          val labels = Vector.tabulate(shp.m)(i =>
+            (lk / math.pow(numLabels, i).toLong % numLabels).toInt)
+          canonPattern(shp, labels)
+        }
+      }.distinct
+      out += level -> pats
+    }
     out.result()
   }
 

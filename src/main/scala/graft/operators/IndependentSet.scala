@@ -35,8 +35,7 @@ object IndependentSet {
       .filter(h(col("dst")) < h(col("src")) ||
         (h(col("dst")) === h(col("src")) && col("dst") < col("src")))
       .select(col("src").as("id")).distinct()
-    val winners = remaining.join(losers, Seq("id"), "left_anti")
-      .localCheckpoint(true)
+    val winners = Materialize(remaining.join(losers, Seq("id"), "left_anti"))
     val neighbors = symEdges
       .join(winners.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .select(col("dst").as("id")).distinct()

@@ -124,7 +124,7 @@ object KTruss {
     val dead = scored.filter(col("sup") < k - 2)
       .select(when(col("fwd"), col("lo")).otherwise(col("hi")).as("src"),
         when(col("fwd"), col("hi")).otherwise(col("lo")).as("dst"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val prev = s.o.select(
       when(col("fwd"), col("lo")).otherwise(col("hi")).as("src"),
       when(col("fwd"), col("hi")).otherwise(col("lo")).as("dst"))
@@ -134,7 +134,7 @@ object KTruss {
       .select(col("lo"), col("hi"),
         (col("sup") - coalesce(col("dcnt"), lit(0L))).as("sup"))
       .filter(col("sup") > 0)
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     State(o2, sup2, dropped)
   }
 
@@ -142,13 +142,13 @@ object KTruss {
       pre: Option[(DataFrame, DataFrame)]): State = {
     val o = canonical(pre.map(_._1)
         .getOrElse(Triangles.orientByDegree(edges)))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // enumeration feeds the support aggregate directly — the triangle
     // set itself is never materialized or carried; a caller that already
     // holds the listing (shared across the mining suite) passes it in
     // and skips the wedge join entirely
     val tris = pre.map(_._2).getOrElse(enumerate(o))
-    State(o, initialSupport(tris).localCheckpoint(true), -1L)
+    State(o, Materialize(initialSupport(tris)), -1L)
   }
 
   /** At most `maxRounds` support-peel rounds at truss number k:

@@ -22,8 +22,7 @@ object LabelPropagation {
   /** k synchronous min-combine rounds along edge direction. k <= 0 → run
     * to fixpoint. Output: (id, label). */
   def runMin(adj: Adjacency, k: Int, maxIter: Int = 1000): DataFrame = {
-    var state = adj.vertices.select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
+    var state = Materialize(adj.vertices.select(col("id"), col("id").as("label")))
     var round = 0
     var done = false
     val limit = if (k > 0) k else maxIter
@@ -51,8 +50,7 @@ object LabelPropagation {
   /** k synchronous mode-combine rounds (community LPA). A vertex with no
     * in-neighbors keeps its label. Ties: smaller label wins. */
   def runMode(adj: Adjacency, k: Int): DataFrame = {
-    var state = adj.vertices.select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
+    var state = Materialize(adj.vertices.select(col("id"), col("id").as("label")))
     for (_ <- 1 to k) {
       val counts = adj.blocks
         .join(state, adj.blocks("src") === state("id"))
@@ -67,7 +65,7 @@ object LabelPropagation {
       val next = state
         .join(winners, Seq("id"), "left")
         .select(col("id"), coalesce(col("msg"), col("label")).as("label"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
       state = next
     }
     state

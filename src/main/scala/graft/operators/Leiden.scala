@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -61,8 +62,8 @@ object Leiden {
     * r2 there, project back: (id, community). */
   def twoLevel(edges: DataFrame, r1: Int, rf: Int, r2: Int): DataFrame = {
     val w1 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-    val comm = Louvain.localMoveRoundsWeighted(w1, r1).localCheckpoint(true)
-    val sub = refineWeighted(w1, comm, rf).localCheckpoint(true)
+    val comm = Materialize(Louvain.localMoveRoundsWeighted(w1, r1))
+    val sub = Materialize(refineWeighted(w1, comm, rf))
     twoLevelFrom(w1, comm, sub, r2)
   }
 
@@ -91,23 +92,21 @@ object Leiden {
     * original vertices. */
   def cluster(edges: DataFrame, roundsPerLevel: Int = 4,
       refineRounds: Int = 2, maxLevels: Int = 10): DataFrame = {
-    var cur = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-      .localCheckpoint(true)
+    var cur = Materialize(edges.select(col("src"), col("dst"), lit(1L).as("w")))
     var seed: DataFrame = null    // coarse-level starting assignment
     var mapping: DataFrame = null // cumulative original-id → current vertex
     var level = 0
     var merging = true
     while (merging && level < maxLevels) {
-      val comm = Louvain.moveRounds(cur, cur, roundsPerLevel, seed)
-        .localCheckpoint(true)
-      val sub = refineWeighted(cur, comm, refineRounds).localCheckpoint(true)
+      val comm = Materialize(Louvain.moveRounds(cur, cur, roundsPerLevel, seed))
+      val sub = Materialize(refineWeighted(cur, comm, refineRounds))
       mapping =
         if (mapping == null) sub
         else mapping
           .join(sub.select(col("id").as("community"),
             col("community").as("c2")), "community")
           .select(col("id"), col("c2").as("community"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
       val r = sub.agg(count(lit(1)).as("nv"),
         countDistinct(col("community")).as("nc")).first()
       merging = r.getLong(1) < r.getLong(0)
@@ -116,8 +115,8 @@ object Leiden {
           .join(comm.withColumnRenamed("community", "parent"), "id")
           .groupBy(col("community").as("id"))
           .agg(min(col("parent")).as("c"))
-          .localCheckpoint(true)
-        cur = Louvain.coarsen(cur, sub).localCheckpoint(true)
+          .transform(Materialize(_))
+        cur = Materialize(Louvain.coarsen(cur, sub))
       }
       level += 1
     }

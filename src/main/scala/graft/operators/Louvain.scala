@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,10 +61,9 @@ object Louvain {
       rounds: Int, init: DataFrame, startRound: Int = 1): DataFrame = {
     // k(v) = Σ_u A_vu INCLUDING the self-loop; 2m = Σ k is then exactly
     // the original graph's edge-endpoint mass after any coarsening
-    val deg = edges.groupBy(col("src").as("id"))
-      .agg(sum(col("w")).as("k"))
-      .localCheckpoint(true)
-    val m2 = deg.agg(sum(col("k"))).first().getLong(0) // = 2m
+    val degObs = Materialize.observed(edges.groupBy(col("src").as("id"))
+      .agg(sum(col("w")).as("k")), sum(col("k")).as("m2"))
+    val (deg, m2) = (degObs.df, degObs.long("m2")) // m2 = 2m, same pass
     // the O(E) side is joined on dst EVERY round — pre-partition and
     // persist it once so only the O(V) state re-shuffles per round (the
     // same exchange-reuse shape as the blocked-CSR kernels); self-loops
@@ -75,7 +75,7 @@ object Louvain {
 
     var state =
       (if (init == null) deg.select(col("id"), col("id").as("c"))
-       else init.select(col("id"), col("c"))).localCheckpoint(true)
+       else init.select(col("id"), col("c"))).transform(Materialize(_))
     for (round <- startRound to rounds) {
       val stdeg = state.join(deg, "id") // (id, c, k) — one O(V) join
       val sigtot = stdeg.groupBy("c").agg(sum(col("k")).as("tot"))
@@ -109,7 +109,7 @@ object Louvain {
         .agg(max(struct(col("score"), (-col("cand")).as("nc"),
           col("cand").as("cd"))).as("m"))
         .select(col("id"), col("m.cd").as("c"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
     }
     nonSelf.unpersist()
     state.select(col("id"), col("c").as("community"))
@@ -133,7 +133,7 @@ object Louvain {
     * loop is this pair iterated; two levels exercise every phase. */
   def twoLevel(edges: DataFrame, rounds1: Int, rounds2: Int): DataFrame = {
     val w1 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-    val l1 = localMoveRoundsWeighted(w1, rounds1).localCheckpoint(true)
+    val l1 = Materialize(localMoveRoundsWeighted(w1, rounds1))
     twoLevelFrom(w1, l1, rounds2)
   }
 
@@ -154,27 +154,25 @@ object Louvain {
     * assignment (id, community). */
   def cluster(edges: DataFrame, roundsPerLevel: Int = 4,
       maxLevels: Int = 10): DataFrame = {
-    var cur = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-      .localCheckpoint(true)
+    var cur = Materialize(edges.select(col("src"), col("dst"), lit(1L).as("w")))
     var mapping: DataFrame = null // cumulative id → community
     var level = 0
     var merging = true
     while (merging && level < maxLevels) {
-      val l = localMoveRoundsWeighted(cur, roundsPerLevel)
-        .localCheckpoint(true)
+      val l = Materialize(localMoveRoundsWeighted(cur, roundsPerLevel))
       mapping =
         if (mapping == null) l
         else mapping
           .join(l.select(col("id").as("community"), col("community").as("c2")),
             "community")
           .select(col("id"), col("c2").as("community"))
-          .localCheckpoint(true)
+          .transform(Materialize(_))
       // one driver action per level: count + distinct-count in a single
       // agg over the already-checkpointed assignment (r3 ran two jobs)
       val r = l.agg(count(lit(1)).as("nv"),
         countDistinct(col("community")).as("nc")).first()
       merging = r.getLong(1) < r.getLong(0)
-      if (merging) cur = coarsen(cur, l).localCheckpoint(true)
+      if (merging) cur = Materialize(coarsen(cur, l))
       level += 1
     }
     mapping

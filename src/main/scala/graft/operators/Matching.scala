@@ -41,7 +41,7 @@ object Matching {
       .join(vmin.select(col("v").as("dst"), col("m").as("md")), "dst")
       .filter(col("prio") === col("ms") && col("prio") === col("md"))
       .select("src", "dst")
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val matchedV = winners.select(col("src").as("id"))
       .unionAll(winners.select(col("dst").as("id"))).distinct()
     val next = remaining

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.{Materialize, Par}
 import graft.functions.SortedArrays
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -30,7 +31,7 @@ object Mining {
     * clique as (v1 … vk) in degree-orientation order. k ≥ 2. */
   def kcliques(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"clique order must be >= 2, got $k")
-    val o = Triangles.orientByDegree(edges).localCheckpoint(true)
+    val o = Materialize(Triangles.orientByDegree(edges))
     var cur = o.select(col("src").as("v1"), col("dst").as("v2"))
     for (i <- 3 to k) {
       // propose v_i along an oriented edge out of v_{i-1} …
@@ -63,7 +64,7 @@ object Mining {
     * arrays stay small at web scale. */
   def kcliqueCount(edges: DataFrame, k: Int): Long =
     kcliqueCountOriented(
-      Triangles.orientByDegree(edges).localCheckpoint(true), k)
+      Materialize(Triangles.orientByDegree(edges)), k)
 
   /** Sorted out-neighbor lists of a degree-oriented edge set — the
     * candidate-set cascade's working frame, shareable across clique
@@ -79,7 +80,7 @@ object Mining {
       olistOpt: Option[DataFrame] = None): Long = {
     require(k >= 2, s"clique order must be >= 2, got $k")
     if (k == 2) return o.count()
-    val olist = olistOpt.getOrElse(outLists(o).localCheckpoint(true))
+    val olist = olistOpt.getOrElse(Materialize(outLists(o)))
     // out-lists are V-sized (bounded by the orientation); broadcast
     // them while that fits so every extension stays in one codegen
     // stage with no exchange of the (huge) prefix stream. The gate is
@@ -160,7 +161,7 @@ object Mining {
     * domains. */
   def fsmWedge(edges: DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame =
-    fsmWedgeFrom(GraphOps.symmetrize(edges).localCheckpoint(true),
+    fsmWedgeFrom(Materialize(GraphOps.symmetrize(edges)),
       minSupport, numLabels)
 
   /** [[fsmWedge]] over a precomputed symmetric edge set. */
@@ -170,7 +171,7 @@ object Mining {
     val nc = sym.groupBy(col("src").as("c"),
         (col("dst") % numLabels).as("l"))
       .agg(countDistinct(col("dst")).as("cnt"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // center domains per (lc, l1, l2): a self-join of nc on the center;
     // l1 = l2 needs cnt ≥ 2 on the single row
     val centers = nc.as("a")
@@ -243,8 +244,8 @@ object Mining {
     * O(α·E) bound — because hub CENTERS, which dominate Σ_v C(d_v, 2),
     * rank above their neighbors and are excluded. */
   def cycle4Count(edges: DataFrame): Long = {
-    val sym = GraphOps.symmetrize(GraphOps.clean(edges)).localCheckpoint(true)
-    val deg = Triangles.symDegrees(sym).localCheckpoint(true)
+    val sym = Materialize(GraphOps.symmetrize(GraphOps.clean(edges)))
+    val deg = Materialize(Triangles.symDegrees(sym))
     cycle4CountFrom(sym, deg)
   }
 
@@ -269,7 +270,7 @@ object Mining {
       .filter(col("ds") < col("du") ||
         (col("ds") === col("du") && col("src") < col("dst")))
       .select(col("src").as("v"), col("dst").as("u"), col("du"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     // (a) out-out wedges: u, w ∈ N⁺(v), (dw, w) ≺ (du, u)
     val outPairs = o
       .join(o.select(col("v"), col("u").as("w"), col("du").as("dw")), "v")
@@ -292,7 +293,7 @@ object Mining {
     * C(t_e, 2) over per-edge triangle counts — the shared edge (the
     * diamond's chord) identifies each diamond exactly once. */
   def diamondCount(edges: DataFrame): Long = {
-    val o = Triangles.orientByDegree(edges).localCheckpoint(true)
+    val o = Materialize(Triangles.orientByDegree(edges))
     diamondCountFrom(triangleListing(o))
   }
 
@@ -331,8 +332,8 @@ object Mining {
   def motif4(edges: DataFrame, triangles: Long, cliques4: Long,
       cycles4Sub: Long, diamondsSub: Long,
       triPerVertex: DataFrame): DataFrame = {
-    val sym = GraphOps.symmetrize(GraphOps.clean(edges)).localCheckpoint(true)
-    val deg = Triangles.symDegrees(sym).localCheckpoint(true)
+    val sym = Materialize(GraphOps.symmetrize(GraphOps.clean(edges)))
+    val deg = Materialize(Triangles.symDegrees(sym))
     motif4From(sym, deg, triangles, cliques4, cycles4Sub, diamondsSub,
       triPerVertex)
   }
@@ -382,7 +383,7 @@ object Mining {
     * min over slot domains (same-label slots share a domain). */
   def fsm3Triangle(edges: DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame = {
-    val o = Triangles.orientByDegree(edges).localCheckpoint(true)
+    val o = Materialize(Triangles.orientByDegree(edges))
     fsm3TriangleFrom(triangleListing(o), minSupport, numLabels)
   }
 
@@ -433,8 +434,8 @@ object Mining {
     * Cross-checked against full enumeration in the spec. */
   def fsm3Path(edges: DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame = {
-    val sym = GraphOps.symmetrize(GraphOps.clean(edges)).localCheckpoint(true)
-    val o = Triangles.orientByDegree(edges).localCheckpoint(true)
+    val sym = Materialize(GraphOps.symmetrize(GraphOps.clean(edges)))
+    val o = Materialize(Triangles.orientByDegree(edges))
     fsm3PathFrom(sym, triangleListing(o), minSupport, numLabels)
   }
 
@@ -452,7 +453,7 @@ object Mining {
         .as("t"))
       .select(col("t.v"), col("t.x"), col("t.y"))
       .groupBy("v", "x", "y").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
   }
 
   /** [[fsm3Path]] over precomputed symmetric edges + triangle listing.
@@ -464,25 +465,16 @@ object Mining {
   def fsm3PathFrom(sym: DataFrame, triList: => DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame = {
     def lb(c: org.apache.spark.sql.Column) = lab3(c, numLabels)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val ncnnF = Future {
+    val ((nc, nn), tno) = Par.both({
       val nc = sym.groupBy(col("src").as("v"), lb(col("dst")).as("l"))
-        .agg(count(lit(1)).as("cnt")).localCheckpoint(true)
+        .agg(count(lit(1)).as("cnt")).transform(Materialize(_))
       val nn = sym.select(col("src").as("x"), col("dst").as("y"))
         .join(nc.select(col("v").as("y"), col("l").as("l2"),
           col("cnt").as("c2")), "y")
         .groupBy(col("x"), lb(col("y")).as("l1"), col("l2"))
-        .agg(sum(col("c2")).as("s")).localCheckpoint(true)
+        .agg(sum(col("c2")).as("s")).transform(Materialize(_))
       (nc, nn)
-    }
-    val tnoF = Future { tnoFrame(triList, numLabels) }
-    val ((nc, nn), tno) =
-      try (Await.result(ncnnF, Duration.Inf), Await.result(tnoF, Duration.Inf))
-      finally pool.shutdown()
+    }, tnoFrame(triList, numLabels))
     def z(c: org.apache.spark.sql.Column) = coalesce(c, lit(0L))
     // slot-1 walk counts W(u, β, γ, δ) = Σ_{b~u, L(b)=β} nn(b, γ, δ)
     val w1 = sym.select(col("src").as("u"), col("dst").as("b"))

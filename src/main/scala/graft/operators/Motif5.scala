@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.exec.{Materialize, Memo, Par}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -315,8 +316,7 @@ object Motif5 {
     * back into the current boundary. */
   def homCount(k: Int, pedges: Seq[(Int, Int)], arcs: DataFrame,
       cliqueCount: Int => Long,
-      foldMemo: java.util.concurrent.ConcurrentHashMap[String, DataFrame])
-      : Long = {
+      foldMemo: Memo[String, DataFrame]): Long = {
     require(pedges.nonEmpty)
     // Precondition: the pattern must be CONNECTED — the elimination
     // joins every vertex's factor bucket as one component, and a
@@ -409,19 +409,19 @@ object Motif5 {
           // cross-job sharing: the fold's value is the extension count
           // of its absorbed sub-pattern, so any fold with the same
           // canonical (boundary-distinguished) structure is the SAME
-          // frame up to the boundary bijection foldKey returns.
-          // computeIfAbsent materializes it exactly once (eager
-          // checkpoint) across the census's hom-job pool; positional ties
-          // between producer and consumer differ only by an automorphism
-          // of the canonical form, under which the function is symmetric.
+          // frame up to the boundary bijection foldKey returns. The
+          // memo materializes it exactly once (eager checkpoint) across
+          // the census's hom jobs; positional ties between producer and
+          // consumer differ only by an automorphism of the canonical
+          // form, under which the function is symmetric.
           val (key, pos) = foldKey(curVars - x, internalAll, absorbedAll)
-          val frame = foldMemo.computeIfAbsent(key, _ =>
+          val frame = foldMemo.getOrCompute(key)(
             curDf
               .groupBy(outVars.map(v => col(s"v$v")): _*)
               .agg(sum(col("cnt")).as("cnt"))
               .select(outVars.zip(pos).map { case (v, p) =>
                 col(s"v$v").as(s"c$p") } :+ col("cnt"): _*)
-              .localCheckpoint(true))
+              .transform(Materialize(_)))
           Factor(curVars - x,
             frame.select(outVars.zip(pos).map { case (v, p) =>
               col(s"c$p").as(s"v$v") } :+ col("cnt"): _*),
@@ -446,14 +446,14 @@ object Motif5 {
     val spark = edges.sparkSession
     val arcs = GraphOps.symmetrize(GraphOps.clean(edges))
       .select(col("src").as("x"), col("dst").as("y"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     val terms: Vector[Vector[(Long, QKey)]] = patterns.map(homTerms)
     // one orientation + out-list build shared by every complete quotient
     // (K2..K5 all route through the candidate-set clique kernel)
     val orientedArcs = Triangles
       .orientByDegree(arcs.select(col("x").as("src"), col("y").as("dst")))
-      .localCheckpoint(true)
-    val arcOlists = Mining.outLists(orientedArcs).localCheckpoint(true)
+      .transform(Materialize(_))
+    val arcOlists = Materialize(Mining.outLists(orientedArcs))
     val cliqueFn: Int => Long =
       k => Mining.kcliqueCountOriented(orientedArcs, k, Some(arcOlists))
     // densest first (they run longest), on a BOUNDED pool: the ~30 hom
@@ -462,28 +462,20 @@ object Motif5 {
     // inflation at 31-way concurrency on 32 cores).
     val keys = terms.flatten.map(_._2).distinct
       .sortBy(q => (-q.k, -q.qedges.size))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // 6 threads kept deep lazy pipelines from thrashing the scheduler
     // (measured 3-7x per-hom inflation at 31-way); with the fold memo
     // the jobs become stepwise-materialized and often BLOCK on a shared
-    // fold's computeIfAbsent, so a somewhat larger pool is needed to
-    // keep independent work in flight while producers materialize
-    // (measured in OPTIMIZATION_r06.md).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(10)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    // one fold memo per census call (per-JVM, rebuilt from the arc
+    // fold another job is materializing, so a somewhat wider Par is
+    // needed to keep independent work in flight while producers
+    // materialize (measured in OPTIMIZATION_r06.md).
+    // One fold memo per census call (per-JVM, rebuilt from the arc
     // frame every invocation): the ~30 hom jobs share every
     // structurally-identical folded message (degree tables,
     // common-neighbor counts, path messages, triangle-extension
     // counts) instead of each re-aggregating its own copy.
-    val foldMemo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    val homs: Map[QKey, Long] =
-      try Await.result(
-        Future.sequence(keys.map(q =>
-          Future(q -> homCount(q.k, q.qedges, arcs, cliqueFn, foldMemo))
-        )), Duration.Inf).toMap
-      finally pool.shutdown()
+    val foldMemo = new Memo[String, DataFrame]
+    val homs: Map[QKey, Long] = Par.map(keys, 10)(q =>
+      q -> homCount(q.k, q.qedges, arcs, cliqueFn, foldMemo)).toMap
     val subs = patterns.indices.map { i =>
       val inj = terms(i).map { case (c, q) => c * homs(q) }.sum
       val a = aut(patterns(i))

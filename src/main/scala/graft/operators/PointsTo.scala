@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.exec.Materialize
+import graft.exec.{Materialize, Par}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -90,21 +90,13 @@ object PointsTo {
     // shape checkpointed pts ∪ Δ and Δ separately, re-deriving Δ's
     // whole dataflow inside both jobs). Union trees over checkpointed
     // leaves stay O(rounds) deep — no lineage blow-up.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    try {
-      for (_ <- 1 to rounds) {
-        val (_, d2, _, dc) = round(pts, dPts, copy, loads, stores)
-        val (dF, cF) = (Future(Materialize(d2)), Future(Materialize(dc)))
-        dPts = Await.result(dF, Duration.Inf)
-        val dCopy = Await.result(cF, Duration.Inf)
-        pts = pts.unionByName(dPts)
-        copy = copy.unionByName(dCopy)
-      }
-    } finally pool.shutdown()
+    for (_ <- 1 to rounds) {
+      val (_, d2, _, dc) = round(pts, dPts, copy, loads, stores)
+      val (dNext, dCopy) = Par.both(Materialize(d2), Materialize(dc))
+      dPts = dNext
+      pts = pts.unionByName(dPts)
+      copy = copy.unionByName(dCopy)
+    }
     pts
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.exec.Materialize
+import graft.exec.{Materialize, Par}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -115,20 +115,13 @@ object PreflowPush {
       .select(col("id"),
         (col("ex") - coalesce(col("po"), lit(0L)) +
           coalesce(col("pi"), lit(0L))).as("ex"))
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val arcs2F = Future { Materialize(arcs2Plan) }
-    val ex2F = Future { Materialize(ex2Plan) }
     // relabel on the new residual graph, old heights. One pass over the
     // residual arcs computes BOTH relabel inputs per vertex — the min
     // neighbor height and whether any admissible arc remains — instead
     // of the former two-pass shape (an admissible-set distinct plus a
     // separate min aggregate, each joined into h2 on its own): same
     // values, two fewer exchanges and no distinct per superstep.
-    val h2F = Future {
+    def h2Plan = {
       val nbrH = arcs2Plan.filter(col("res") > 0)
         .join(h.select(col("id").as("v"), col("h").as("hv")), "v")
         .join(h.select(col("id").as("u"), col("h").as("hu")), "u")
@@ -141,13 +134,9 @@ object PreflowPush {
           when(col("ex2") > 0 && col("id") =!= s && col("id") =!= t &&
               coalesce(col("adm"), lit(0L)) === 0L,
             coalesce(col("mh") + 1, col("h"))).otherwise(col("h")).as("h"))
-        .transform(Materialize(_))
     }
-    val (arcs2, ex2, h2) =
-      try (Await.result(arcs2F, Duration.Inf),
-        Await.result(ex2F, Duration.Inf),
-        Await.result(h2F, Duration.Inf))
-      finally pool.shutdown()
+    val Vector(arcs2, ex2, h2) = Par.map(Seq(() => arcs2Plan, () => ex2Plan,
+      () => h2Plan), 3)(plan => Materialize(plan()))
     (arcs2, ex2, h2)
   }
 

@@ -79,11 +79,11 @@ object Sssp {
     val spark = adj.blocks.sparkSession
     import spark.implicits._
     var state = Seq(source).toDF("id")
-      .select(col("id"), zeroDist(adj).as("dist")).localCheckpoint(true)
+      .select(col("id"), zeroDist(adj).as("dist")).transform(Materialize(_))
     for (_ <- 1 to k) {
       state = state.unionAll(relax(adj, state))
         .groupBy("id").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+        .transform(Materialize(_))
     }
     state
   }
@@ -104,7 +104,7 @@ object Sssp {
     import spark.implicits._
     var state = Seq(source).toDF("id")
       .select(col("id"), zeroDist(adj).as("dist"), lit(true).as("improved"))
-      .localCheckpoint(true)
+      .transform(Materialize(_))
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < maxIter) {

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -94,13 +95,13 @@ object Ranking {
       numPartitions: Int = 32): DataFrame = {
     val (out, parts) =
       tieredCumSumPlan(df, sortExprs, valueCol, cumCol, numPartitions)
-    val res = out.localCheckpoint(true)
+    val res = Materialize(out)
     parts.unpersist()
     res
   }
 
   /** df + a dense 0-based `rankCol` equal to the row's global rank under
-    * `sortExprs`. Eagerly materialized (localCheckpoint) while the sampled
+    * `sortExprs`. Eagerly materialized (Materialize) while the sampled
     * partitioning is still pinned, then self-contained. */
   def globalRank(
       df: DataFrame,
@@ -108,7 +109,7 @@ object Ranking {
       rankCol: String,
       numPartitions: Int = 32): DataFrame = {
     val (ranked, parts) = globalRankPlan(df, sortExprs, rankCol, numPartitions)
-    val out = ranked.localCheckpoint(true)
+    val out = Materialize(ranked)
     parts.unpersist()
     out
   }

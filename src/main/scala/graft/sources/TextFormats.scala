@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.exec.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -136,8 +137,7 @@ object TextFormats {
     * lines are isolated vertices (kept for the position count, emitting
     * no edges). */
   def readMetis(spark: SparkSession, path: String): DataFrame = {
-    val lines = numberedLines(spark, path, keepEmpty = true)
-      .localCheckpoint(true)
+    val lines = Materialize(numberedLines(spark, path, keepEmpty = true))
     val parts = split(col("tok"), " ")
     lines.filter(col("idx") >= 1 && length(col("tok")) > 0)
       .select((col("idx") - 1).as("src"), explode(parts).as("t"))
@@ -183,7 +183,7 @@ object TextFormats {
     * offsets at lines [3, 3+n), destinations at [3+n, 3+n+m); edge j
     * belongs to the vertex whose offset range contains j. */
   def readPbbs(spark: SparkSession, path: String): DataFrame = {
-    val lines = numberedLines(spark, path).localCheckpoint(true)
+    val lines = Materialize(numberedLines(spark, path))
     val head = lines.filter(col("idx") < 3).orderBy("idx")
       .collect().map(_.getString(1))
     require(head.headOption.contains("AdjacencyGraph"),
@@ -225,7 +225,7 @@ object TextFormats {
     * edges to node `featureOffset + feature`, where featureOffset = the
     * number of example lines — the bipartite example→feature graph. */
   def readSvmlight(spark: SparkSession, path: String): DataFrame = {
-    val lines = numberedLines(spark, path).localCheckpoint(true)
+    val lines = Materialize(numberedLines(spark, path))
     val nExamples = lines.count()
     val parts = split(col("tok"), " ")
     lines

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.exec.Materialize
 import graft.operators.GraphOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -72,7 +73,7 @@ object TpchGraph {
     * stores(q,p)). */
   def ptaConstraints(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val e = edges(spark, sfDir).localCheckpoint(true)
+    val e = Materialize(edges(spark, sfDir))
     val vs = e.select(col("src").as("id"))
       .unionAll(e.select(col("dst").as("id"))).distinct()
     val addressOf = vs.filter(col("id") % 5 === 0)

@@ -60,23 +60,38 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("observed metrics and the capped checkpoint live only in graft.exec") {
     // every round's observed count goes through graft.exec.Materialize
-    // (auto-named, a missing key throws); no operator hand-rolls it
+    // (auto-named, a missing key throws); no operator hand-rolls it.
+    // Every checkpoint goes through Materialize, every concurrent job set
+    // through Par and every shared memo through Memo.
     import scala.jdk.CollectionConverters._
     val exec = java.nio.file.Paths.get("src/main/scala/graft/exec")
     val bridge = "GraftPlanBridge.scala"
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .filterNot(_.startsWith(exec)).toList
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    def read(f: java.nio.file.Path) =
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val files = all.filterNot(_.startsWith(exec))
     assert(files.size > 40, s"source walk found only ${files.size} files")
     for (f <- files) {
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val src = read(f)
       for (banned <- Seq("Observation(", ".observe(", "def ck("))
         assert(!src.contains(banned),
           s"$f contains `$banned` — use graft.exec.Materialize")
-      if (f.getFileName.toString != bridge)
+      if (f.getFileName.toString != bridge) {
         assert(!src.contains("checkpointCapped"),
           s"$f calls the capped checkpoint directly — use Materialize(df)")
+        for (banned <- Seq(".localCheckpoint(", "Executors.",
+            "ExecutionContext", "identityHashCode", "computeIfAbsent"))
+          assert(!src.contains(banned), s"$f contains `$banned` — use " +
+            "graft.exec (Materialize, Par or Memo)")
+      }
     }
+    // nothing is tied to one checkout (the bench's frozen artifact path
+    // in Bench.scala is the one exception); tests run from its root
+    val checkout = java.nio.file.Paths.get("").toAbsolutePath.toString + "/"
+    for (f <- all if f.getFileName.toString != "Bench.scala")
+      assert(!read(f).contains(checkout),
+        s"$f hard-codes the absolute checkout path $checkout")
   }
 
   test("no driver query plans a cartesian product") {

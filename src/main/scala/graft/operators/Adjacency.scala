@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -25,6 +25,14 @@ final case class Adjacency(
     noInbound: DataFrame, // (id) with in-degree 0 — persisted (static)
     numVertices: Long,
     numEdges: Long) {
+
+  /** The blocked-CSR gather: joins `frontier` (keyed by `id`) to its
+    * vertices' blocks and emits one row per out-edge, `id` = the edge's
+    * dst, followed by `msgs` over the joined block and frontier row. A msg
+    * over a column both sides carry names its side (`blocks("deg")`). */
+  def scatter(frontier: DataFrame, msgs: Column*): DataFrame =
+    blocks.join(frontier, blocks("src") === frontier("id"))
+      .select(explode(col("dsts")).as("id") +: msgs: _*)
 
   def unpersist(): Unit = {
     blocks.unpersist()

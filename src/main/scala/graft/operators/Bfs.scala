@@ -43,9 +43,7 @@ object Bfs {
     var rounds = 0
     while (newly > 0 && rounds < maxRounds) {
       val frontier = state.filter(col("dist") === rounds)
-      val scatter = adj.blocks
-        .join(frontier, adj.blocks("src") === frontier("id"))
-        .select(explode(col("dsts")).as("id"), (col("dist") + 1).as("dist"))
+      val scatter = adj.scatter(frontier, (col("dist") + 1).as("dist"))
       rounds += 1
       val o = Materialize.observed(state.unionAll(scatter)
         .groupBy("id").agg(min(col("dist")).as("dist")),

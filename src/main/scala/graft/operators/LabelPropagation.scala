@@ -27,9 +27,7 @@ object LabelPropagation {
     var done = false
     val limit = if (k > 0) k else maxIter
     while (!done && round < limit) {
-      val mins = adj.blocks
-        .join(state, adj.blocks("src") === state("id"))
-        .select(explode(col("dsts")).as("id"), col("label").as("msg"))
+      val mins = adj.scatter(state, col("label").as("msg"))
         .groupBy("id").agg(min(col("msg")).as("msg"))
       // the changed flag rides the materializing pass (Dataset.observe) —
       // no extra fixpoint join/scan per round
@@ -52,9 +50,7 @@ object LabelPropagation {
   def runMode(adj: Adjacency, k: Int): DataFrame = {
     var state = Materialize(adj.vertices.select(col("id"), col("id").as("label")))
     for (_ <- 1 to k) {
-      val counts = adj.blocks
-        .join(state, adj.blocks("src") === state("id"))
-        .select(explode(col("dsts")).as("id"), col("label").as("msg"))
+      val counts = adj.scatter(state, col("label").as("msg"))
         .groupBy("id", "msg").agg(count(lit(1)).as("cnt"))
       val w = Window.partitionBy(col("id"))
         .orderBy(col("cnt").desc, col("msg").asc)

@@ -1,14 +1,10 @@
 package graft.operators
 
 import graft.exec.Materialize
+import graft.operators.Supersteps.Step
 import graft.plans.SnapshotStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.collection.mutable.ArrayBuffer
-
-/** One superstep's runtime stats (the reference's -statFile rows). */
-final case class IterMetric(superstep: Int, l1Residual: Double,
-    edgesProcessed: Long, millis: Long)
 
 final case class PageRankResult(ranks: DataFrame, iterations: Int,
     converged: Boolean, metrics: Seq[IterMetric])
@@ -32,25 +28,18 @@ final case class PageRankResult(ranks: DataFrame, iterations: Int,
  * adjacency's stable src-partitioning, contributions partially aggregate
  * map-side before the single O(E)→O(V) shuffle on dst; a checked
  * superstep's dst aggregation also takes one self row per vertex, so it
- * yields the L1 residual too. Every `checkpointEvery` supersteps the state
- * is committed to the SnapshotStore and re-read, truncating lineage and
- * making the run resumable mid-iteration.
+ * yields the L1 residual too. The three loops run through [[Supersteps]]:
+ * with a store, the state is committed whenever a step reaches or crosses a
+ * multiple of `checkpointEvery` supersteps, and when the run stops, so the
+ * run is resumable mid-iteration.
  */
 object PageRank {
 
   val Alpha = 0.85
 
-  /** Pull-topological power iteration (PageRank-pull.cpp:201-281).
-    *
-    * `checkEvery` > 1 chains that many supersteps LAZILY into one Catalyst
-    * job before materializing and testing the L1 residual — amortizing the
-    * serial per-superstep driver cost (planning, action round-trip,
-    * checkpoint write) that otherwise dominates and caps thread scaling.
-    * The residual is still a true consecutive-superstep L1 (the chunk's
-    * last two states both materialize); the only semantic difference from
-    * the reference's every-iteration check is that the loop can run up to
-    * checkEvery-1 extra supersteps past the crossing point — i.e. it stops
-    * strictly MORE converged, which the 1e-6 allclose gate absorbs. */
+  /** Pull-topological power iteration (PageRank-pull.cpp:201-281). With
+    * `tol >= 0` every superstep is checked against the L1 residual;
+    * `tol < 0` runs exactly `maxIter` supersteps (fixed mode). */
   def runTopo(
       adj: Adjacency,
       tol: Double = 1e-6,
@@ -58,26 +47,22 @@ object PageRank {
       alpha: Double = Alpha,
       checkpointEvery: Int = 25,
       store: Option[SnapshotStore] = None,
-      resume: Boolean = false,
-      checkEvery: Int = 1): PageRankResult = {
+      resume: Boolean = false): PageRankResult = {
 
     // tol < 0 → fixed-iteration mode: no residual, no self rows.
     val trackResidual = tol >= 0
     val n = adj.numVertices
     val base = (1.0 - alpha) / n
-    val metrics = ArrayBuffer.empty[IterMetric]
 
     // contributions value(u)/nout(u) along out-edges, partially
     // aggregated map-side before the one dst shuffle
-    def gather(st: DataFrame): DataFrame = adj.blocks
-      .join(st, adj.blocks("src") === st("id"))
-      .select(explode(col("dsts")).as("id"),
-        (col("value") / col("deg")).as("c"))
+    def gather(st: DataFrame): DataFrame =
+      adj.scatter(st, (col("value") / col("deg")).as("c"))
     val rank = (lit(base) + lit(alpha) * sum(col("c"))).as("value")
 
-    // unchecked step (fixed mode, or inside a checkEvery chain): the
-    // static zero-in-degree base ranks are union'd in AFTER the
-    // aggregation, so they shuffle nothing; the state is referenced once
+    // unchecked step (fixed mode): the static zero-in-degree base ranks
+    // are union'd in AFTER the aggregation, so they shuffle nothing; the
+    // state is referenced once
     def superstep(st: DataFrame): DataFrame = gather(st)
       .groupBy("id").agg(rank)
       .unionAll(adj.noInbound.select(col("id"), lit(base).as("value")))
@@ -91,55 +76,39 @@ object PageRank {
         st.select(col("id"), lit(0.0).as("c"), col("value").as("prev")))
       .groupBy("id").agg(rank, max(col("prev")).as("prev"))
 
-    // the start state is a leaf already (the cached vertex table or the
-    // snapshot's parquet files), so it is not checkpointed
-    val resumed = if (resume) store.flatMap(_.latest("pagerank_topo")) else None
-    var iter = resumed.map(_._1).getOrElse(0)
-    var state = resumed.map(_._2).getOrElse(
-      adj.vertices.select(col("id"), lit(1.0 / n).as("value")))
-
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
-      // Fixed-iteration mode has no per-superstep stop test, so chain up
-      // to 8 supersteps lazily into ONE Catalyst job (plan depth grows
-      // linearly — the superstep references its input once): the serial
-      // driver cost (planning, action round-trip, checkpoint write) is
-      // paid once per chunk instead of once per superstep, which is the
-      // overhead that caps thread scaling of the short fixed-iteration
-      // bench loops. Residual mode keeps the caller's checkEvery.
-      val chunk = if (trackResidual) checkEvery else math.max(checkEvery, 8)
-      val steps = math.min(chunk, maxIter - iter)
-      // The capped local checkpoint truncates the logical plan at every
-      // materialization (the gather join would otherwise multiply the
-      // leaf's size estimate every superstep). Durability across executor
-      // loss comes from the SnapshotStore commits, not this checkpoint.
-      val chain = (1 until steps).foldLeft(state)((st, _) => superstep(st))
-      var (next, l1) =
-        if (!trackResidual) (Materialize(superstep(chain)), Double.NaN)
-        else {
-          // the checked step reads its input twice (gather, self rows), so
-          // the input is materialized; the residual rides the step's action
-          val o = Materialize.observed(
-            checkedSuperstep(if (steps == 1) chain else Materialize(chain)),
+    // The capped local checkpoint truncates the logical plan at every
+    // materialization (the gather join would otherwise multiply the leaf's
+    // size estimate every superstep). Durability across executor loss
+    // comes from the SnapshotStore commits, not this checkpoint.
+    val r = Supersteps.run("pagerank_topo", adj.numEdges, maxIter,
+        checkpointEvery, store, resume)(
+      // the start state is a leaf already (the cached vertex table or the
+      // snapshot's parquet files), so it is not checkpointed
+      resumed => (resumed.getOrElse(
+        adj.vertices.select(col("id"), lit(1.0 / n).as("value"))), false)) {
+      (iter, st) =>
+        if (trackResidual) {
+          // the step's input is a leaf, read twice (gather, self rows);
+          // the residual rides the step's materializing action
+          val o = Materialize.observed(checkedSuperstep(st),
             Seq(sum(abs(col("value") - col("prev"))).as("l1")),
             _.select(col("id"), col("value")))
-          (o.df, o.double("l1"))
+          val l1 = o.double("l1")
+          Step(o.df, 1, l1, l1 <= tol)
+        } else {
+          // Fixed mode has no per-superstep stop test, so up to 8
+          // supersteps chain lazily into ONE Catalyst job (plan depth grows
+          // linearly — the superstep references its input once): the
+          // serial driver cost (planning, action round-trip, checkpoint
+          // write) is paid once per chunk instead of once per superstep,
+          // which is the overhead that caps thread scaling of the short
+          // fixed-iteration bench loops.
+          val steps = math.min(8, maxIter - iter)
+          Step(Materialize((1 to steps).foldLeft(st)((s, _) => superstep(s))),
+            steps, Double.NaN, false)
         }
-
-      iter += steps
-      val ms = (System.nanoTime() - t0) / 1000000
-      metrics += IterMetric(iter, l1, adj.numEdges * steps, ms)
-      store.foreach(_.appendMetrics("pagerank_topo", iter, l1,
-        adj.numEdges * steps, ms))
-      converged = trackResidual && l1 <= tol
-
-      if (store.nonEmpty && (iter % checkpointEvery < steps || converged)) {
-        next = store.get.commitState("pagerank_topo", iter, next)
-      }
-      state = next
     }
-    PageRankResult(state, iter, converged, metrics.toSeq)
+    PageRankResult(r.state, r.iterations, r.done, r.metrics)
   }
 
   /** Exactly `k` pull-topo iterations, no convergence check — the
@@ -163,27 +132,20 @@ object PageRank {
       store: Option[SnapshotStore] = None,
       resume: Boolean = false): PageRankResult = {
 
-    val metrics = ArrayBuffer.empty[IterMetric]
-    val resumed = if (resume) store.flatMap(_.latest("pagerank_push")) else None
-    var iter = resumed.map(_._1).getOrElse(0)
     // the frontier size rides every materializing pass, the start
-    // state's included
+    // state's included; an empty start frontier runs no superstep
     val frontierN = sum(when(col("residual") > tol, 1L).otherwise(0L))
-    val start = Materialize.observed(resumed.map(_._2).getOrElse(
-      adj.vertices.select(col("id"), lit(0.0).as("value"),
-        lit(1.0 - alpha).as("residual"))), frontierN.as("f"))
-    var state = start.df
-    var frontierSize = start.long("f")
-    var converged = frontierSize == 0L
-
-    while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
-      val frontier = state.filter(col("residual") > tol)
+    val r = Supersteps.run("pagerank_push", adj.numEdges, maxIter,
+        checkpointEvery, store, resume) { resumed =>
+      val o = Materialize.observed(resumed.getOrElse(
+        adj.vertices.select(col("id"), lit(0.0).as("value"),
+          lit(1.0 - alpha).as("residual"))), frontierN.as("f"))
+      (o.df, o.long("f") == 0L)
+    } { (_, state) =>
       // scatter: delta = residual*alpha/outdeg to each out-neighbor;
       // the frontier filter is pushed below the join by Catalyst.
-      val deltas = adj.blocks
-        .join(frontier, adj.blocks("src") === frontier("id"))
-        .select(explode(col("dsts")).as("id"),
+      val deltas = adj
+        .scatter(state.filter(col("residual") > tol),
           (col("residual") * alpha / col("deg")).as("d"))
         .groupBy("id").agg(sum(col("d")).as("dsum"))
 
@@ -197,24 +159,10 @@ object PageRank {
           (when(active, lit(0.0)).otherwise(col("residual"))
             + coalesce(col("dsum"), lit(0.0))).as("residual")),
         frontierN.as("f"), sum(col("residual")).as("res_l1"))
-
-      var next = o.df
-      frontierSize = o.long("f")
-      val l1 = o.double("res_l1")
-
-      iter += 1
-      val ms = (System.nanoTime() - t0) / 1000000
-      metrics += IterMetric(iter, l1, adj.numEdges, ms)
-      store.foreach(_.appendMetrics("pagerank_push", iter, l1, adj.numEdges, ms))
-      converged = frontierSize == 0L
-
-      if (store.nonEmpty && (iter % checkpointEvery == 0 || converged)) {
-        next = store.get.commitState("pagerank_push", iter, next)
-      }
-      state = next
+      Step(o.df, 1, o.double("res_l1"), o.long("f") == 0L)
     }
-    PageRankResult(state.select(col("id"), col("value")), iter, converged,
-      metrics.toSeq)
+    PageRankResult(r.state.select(col("id"), col("value")), r.iterations,
+      r.done, r.metrics)
   }
 
   /**
@@ -254,35 +202,30 @@ object PageRank {
       store: Option[SnapshotStore] = None,
       resume: Boolean = false): PageRankResult = {
 
-    val metrics = ArrayBuffer.empty[IterMetric]
-    val resumed =
-      if (resume) store.flatMap(_.latest("pagerank_residual")) else None
-    var iter = resumed.map(_._1).getOrElse(0)
     val outdeg = adj.blocks.groupBy("src").agg(first(col("deg")).as("odeg"))
     // reference accum: this round's activations with out-edges — a
     // function of the state BEFORE the round, so each round's observe
     // (the start state's included) yields the NEXT round's value. The
     // reference breaks AFTER running the round whose accum is 0 (that
-    // round still flushes dangling activations), so the test below uses
+    // round still flushes dangling activations), so the stop test uses
     // the accum of the round being entered, not the one just produced.
     val accum = sum(when(col("residual") > tol && col("deg") > 0, 1L)
       .otherwise(0L))
-    val start = Materialize.observed(resumed.map(_._2).getOrElse(
-      adj.vertices.join(outdeg, adj.vertices("id") === outdeg("src"), "left")
-        .select(col("id"), coalesce(col("odeg"), lit(0L)).as("deg"),
-          lit(0.0).as("value"), lit(1.0 - alpha).as("residual"))),
-      accum.as("accum"))
-    var state = start.df
-    var nextAccum = start.long("accum")
-    var converged = false
-
-    while (!converged && iter < maxIter) {
+    var nextAccum = 0L
+    val r = Supersteps.run("pagerank_residual", adj.numEdges, maxIter,
+        checkpointEvery, store, resume) { resumed =>
+      val o = Materialize.observed(resumed.getOrElse(
+        adj.vertices.join(outdeg, adj.vertices("id") === outdeg("src"), "left")
+          .select(col("id"), coalesce(col("odeg"), lit(0L)).as("deg"),
+            lit(0.0).as("value"), lit(1.0 - alpha).as("residual"))),
+        accum.as("accum"))
+      nextAccum = o.long("accum")
+      (o.df, false)
+    } { (_, state) =>
       val thisAccum = nextAccum
-      val t0 = System.nanoTime()
-      val frontier = state.filter(col("residual") > tol)
-      val deltas = adj.blocks
-        .join(frontier, adj.blocks("src") === frontier("id"))
-        .select(explode(col("dsts")).as("id"),
+      // the state carries `deg` too, so the block's side is named
+      val deltas = adj
+        .scatter(state.filter(col("residual") > tol),
           ((col("residual") * alpha) / adj.blocks("deg")).as("d"))
         .groupBy("id").agg(sum(col("d")).as("dsum"))
 
@@ -297,24 +240,11 @@ object PageRank {
             .otherwise(when(active, lit(0.0)).otherwise(col("residual")))
             .as("residual")),
         accum.as("accum"), sum(col("residual")).as("res_l1"))
-
-      var next = o.df
       nextAccum = o.long("accum")
-      val l1 = o.double("res_l1")
-      iter += 1
-      val ms = (System.nanoTime() - t0) / 1000000
-      metrics += IterMetric(iter, l1, adj.numEdges, ms)
-      store.foreach(_.appendMetrics("pagerank_residual", iter, l1,
-        adj.numEdges, ms))
-      converged = thisAccum == 0L
-
-      if (store.nonEmpty && (iter % checkpointEvery == 0 || converged)) {
-        next = store.get.commitState("pagerank_residual", iter, next)
-      }
-      state = next
+      Step(o.df, 1, o.double("res_l1"), thisAccum == 0L)
     }
-    PageRankResult(state.select(col("id"), col("value")), iter, converged,
-      metrics.toSeq)
+    PageRankResult(r.state.select(col("id"), col("value")), r.iterations,
+      r.done, r.metrics)
   }
 
   /** Exactly `k` pull-residual rounds with tolerance 0 (active =

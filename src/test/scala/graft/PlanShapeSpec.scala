@@ -58,19 +58,23 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(parts.groupBy("part").count().count() == 2)
   }
 
+  // every Scala source under src/main (tests run from the checkout root)
+  private lazy val mainSources: List[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+  }
+  private def read(f: java.nio.file.Path) =
+    new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+
   test("observed metrics and the capped checkpoint live only in graft.exec") {
     // every round's observed count goes through graft.exec.Materialize
     // (auto-named, a missing key throws); no operator hand-rolls it.
     // Every checkpoint goes through Materialize, every concurrent job set
     // through Par and every shared memo through Memo.
-    import scala.jdk.CollectionConverters._
     val exec = java.nio.file.Paths.get("src/main/scala/graft/exec")
     val bridge = "GraftPlanBridge.scala"
-    val all = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    def read(f: java.nio.file.Path) =
-      new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-    val files = all.filterNot(_.startsWith(exec))
+    val files = mainSources.filterNot(_.startsWith(exec))
     assert(files.size > 40, s"source walk found only ${files.size} files")
     for (f <- files) {
       val src = read(f)
@@ -89,9 +93,21 @@ class PlanShapeSpec extends AnyFunSuite {
     // nothing is tied to one checkout (the bench's frozen artifact path
     // in Bench.scala is the one exception); tests run from its root
     val checkout = java.nio.file.Paths.get("").toAbsolutePath.toString + "/"
-    for (f <- all if f.getFileName.toString != "Bench.scala")
+    for (f <- mainSources if f.getFileName.toString != "Bench.scala")
       assert(!read(f).contains(checkout),
         s"$f hard-codes the absolute checkout path $checkout")
+  }
+
+  test("snapshot commits, metrics rows and resume live only in Supersteps") {
+    // the store-backed kernels loop through graft.operators.Supersteps,
+    // which owns the resume lookup, the metrics row and the commit rule
+    val owners = Set("Supersteps.scala", "SnapshotStore.scala")
+    val files = mainSources.filterNot(f => owners(f.getFileName.toString))
+    assert(files.size > 40, s"source walk found only ${files.size} files")
+    for (f <- files; banned <- Seq("commitState(", "appendMetrics(",
+        ".latest("))
+      assert(!read(f).contains(banned),
+        s"$f contains `$banned` — run the loop through Supersteps")
   }
 
   test("no driver query plans a cartesian product") {

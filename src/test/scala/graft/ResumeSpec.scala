@@ -3,7 +3,8 @@ package graft
 import graft.operators.{ConnectedComponents, PageRank}
 import graft.plans.SnapshotStore
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.regex.Pattern
 import scala.jdk.CollectionConverters._
 
 /** Checkpoint/resume semantics (north rule: resumable mid-iteration). */
@@ -12,7 +13,7 @@ class ResumeSpec extends AnyFunSuite {
 
   private def tmp(): String =
     Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "snap").toString
+      Paths.get("target"), "snap").toString
 
   test("interrupted PageRank resumes from the last snapshot and matches") {
     val storeA = new SnapshotStore(tmp(), spark)
@@ -73,6 +74,105 @@ class ResumeSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("push PageRank resumes mid-run and matches uninterrupted") {
+    val full = PageRank.runPush(web.adjacency, tol = 1e-6)
+    assert(full.converged)
+
+    val store = new SnapshotStore(tmp(), spark)
+    // interrupted run: stops at superstep 12 (last commit at 8)
+    val partial = PageRank.runPush(web.adjacency, tol = 1e-6, maxIter = 12,
+      checkpointEvery = 8, store = Some(store))
+    assert(!partial.converged)
+    assert(store.latest("pagerank_push").map(_._1).contains(8))
+
+    val resumed = PageRank.runPush(web.adjacency, tol = 1e-6,
+      checkpointEvery = 8, store = Some(store), resume = true)
+    assert(resumed.converged)
+    assert(resumed.iterations == full.iterations)
+
+    val a = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val b = resumed.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val maxDiff = a.map { case (id, v) => math.abs(v - b(id)) }.max
+    assert(maxDiff <= 1e-12, s"resumed diverged by $maxDiff")
+  }
+
+  // Supersteps' bookkeeping, pinned per kernel: the committed supersteps
+  // (manifest names) and the metrics table's (algo, superstep) rows in
+  // append order, for an interrupted run and its resume on one store. The
+  // expected lists were taken by running these same calls on the
+  // hand-written per-kernel loops that Supersteps replaced.
+  private def bookkeeping(algo: String)(calls: Option[SnapshotStore] => Unit)
+      : (Seq[Int], Seq[(String, Int)]) = {
+    val store = new SnapshotStore(tmp(), spark)
+    calls(Some(store))
+    val manifest = (Pattern.quote(algo) + """-(\d+)\.json""").r
+    val commits = Files.list(Paths.get(store.root, "snapshots")).iterator()
+      .asScala.map(_.getFileName.toString)
+      .collect { case manifest(n) => n.toInt }.toSeq.sorted
+    val row = """"algo":"([^"]+)","superstep":(\d+)""".r.unanchored
+    val rows = Files.readAllLines(Paths.get(store.root, "metrics",
+      "metrics.jsonl")).asScala.toSeq.map { case row(a, n) => (a, n.toInt) }
+    (commits, rows)
+  }
+
+  test("Supersteps bookkeeping: checked topo PageRank") {
+    val (commits, rows) = bookkeeping("pagerank_topo") { store =>
+      PageRank.runTopo(web.adjacency, tol = 1e-6, maxIter = 14,
+        checkpointEvery = 10, store = store)
+      PageRank.runTopo(web.adjacency, tol = 1e-6, checkpointEvery = 10,
+        store = store, resume = true)
+    }
+    assert(commits == (10 to 60 by 10))
+    assert(rows == ((1 to 14) ++ (11 to 60)).map("pagerank_topo" -> _))
+  }
+
+  test("Supersteps bookkeeping: fixed topo PageRank, 8-step chains") {
+    // chains end at 8, 16 and 20 (maxIter), then 26 on resume; each one
+    // reaches or crosses a multiple of 5, so each is committed
+    val (commits, rows) = bookkeeping("pagerank_topo") { store =>
+      PageRank.runTopo(web.adjacency, tol = -1, maxIter = 20,
+        checkpointEvery = 5, store = store)
+      PageRank.runTopo(web.adjacency, tol = -1, maxIter = 26,
+        checkpointEvery = 5, store = store, resume = true)
+    }
+    assert(commits == Seq(8, 16, 20, 26))
+    assert(rows == Seq(8, 16, 20, 26).map("pagerank_topo" -> _))
+  }
+
+  test("Supersteps bookkeeping: push PageRank") {
+    val (commits, rows) = bookkeeping("pagerank_push") { store =>
+      PageRank.runPush(web.adjacency, tol = 1e-6, maxIter = 12,
+        checkpointEvery = 8, store = store)
+      PageRank.runPush(web.adjacency, tol = 1e-6, checkpointEvery = 8,
+        store = store, resume = true)
+    }
+    assert(commits == (8 to 96 by 8))
+    assert(rows == ((1 to 12) ++ (9 to 96)).map("pagerank_push" -> _))
+  }
+
+  test("Supersteps bookkeeping: pull-residual PageRank") {
+    val (commits, rows) = bookkeeping("pagerank_residual") { store =>
+      PageRank.runResidual(web.adjacency, tol = 1e-8, maxIter = 12,
+        checkpointEvery = 8, store = store)
+      PageRank.runResidual(web.adjacency, tol = 1e-8, checkpointEvery = 8,
+        store = store, resume = true)
+    }
+    // the converged superstep (126) is committed off the 8-grid
+    assert(commits == (8 to 120 by 8) :+ 126)
+    assert(rows == ((1 to 12) ++ (9 to 126)).map("pagerank_residual" -> _))
+  }
+
+  test("Supersteps bookkeeping: connected components") {
+    val (commits, rows) = bookkeeping("cc") { store =>
+      ConnectedComponents.run(symAdj, maxIter = 2, checkpointEvery = 2,
+        store = store)
+      ConnectedComponents.run(symAdj, checkpointEvery = 2, store = store,
+        resume = true)
+    }
+    assert(commits == Seq(2, 4, 6))
+    assert(rows == (1 to 6).map("cc" -> _))
+  }
+
   test("snapshot store: manifests, latest, metrics table") {
     val store = new SnapshotStore(tmp(), spark)
     assert(store.latest("x").isEmpty)
@@ -89,7 +189,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(m.count() == 2)
     assert(m.columns.contains("l1_residual"))
     // per-partition lineage recorded in the manifest
-    val manifest = Files.list(java.nio.file.Paths.get(store.root, "snapshots"))
+    val manifest = Files.list(Paths.get(store.root, "snapshots"))
       .iterator().next()
     assert(Files.readString(manifest).contains("partition_lineage"))
 
@@ -97,10 +197,10 @@ class ResumeSpec extends AnyFunSuite {
     val state = spark.range(0, 50, 1, 3).selectExpr("id", "id * 0.5 AS value")
     store.commitState("x", 9, state)
     val lineage = Files.readString(
-      java.nio.file.Paths.get(store.root, "snapshots", "x-000000009.json"))
+      Paths.get(store.root, "snapshots", "x-000000009.json"))
     val rows = """"rows":(\d+)""".r.findAllMatchIn(lineage)
       .map(_.group(1).toLong).toSeq
-    val parts = Files.list(java.nio.file.Paths.get(store.root, "data", "x",
+    val parts = Files.list(Paths.get(store.root, "data", "x",
       "step=9")).iterator().asScala.map(_.getFileName.toString)
       .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
     assert(parts == 3)

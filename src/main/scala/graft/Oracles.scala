@@ -1152,7 +1152,7 @@ object Oracles {
   }
 
   /** Lock-step preflow-push (mirrors
-    * graft.operators.PreflowPush.fixedRounds over the weighted directed
+    * graft.operators.PreflowPush.run over the weighted directed
     * fixture; s = min vertex, t = max vertex in s's mod-8 class): per
     * round a push phase (per-vertex prefix-sum allotment over admissible
     * arcs) then a relabel phase on the post-push residual graph.
@@ -1239,7 +1239,7 @@ object Oracles {
   }
 
   /** Andersen points-to, `rounds` unrolled semi-naive rounds (mirrors
-    * graft.operators.PointsTo.fixedRounds over the
+    * graft.operators.PointsTo.run over the
     * TpchGraph.ptaConstraints fixture): copy-edge growth from load/store
     * constraints, then one propagation step, both deduped by UNION.
     * Output: per-variable pts-set sizes. */

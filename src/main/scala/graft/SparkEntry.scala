@@ -231,7 +231,7 @@ object SparkEntry {
     "sssp_weighted4" -> ((s, d) => {
       val adj = adjWeighted(s, d)
       val src = adj.vertices.agg(min("id")).first().getLong(0)
-      Sssp.weightedFixedRounds(adj, src, 4).orderBy("id")
+      Sssp.fixedRounds(adj, src, 4).orderBy("id")
     }),
     // weighted-surface round trips: 3-field CSV, MatrixMarket `real`,
     // DIMACS `a src dst w` arcs, neo4j bulk-import CSVs — each written
@@ -509,7 +509,7 @@ object SparkEntry {
       val sMin = vs.agg(min("id")).first().getLong(0)
       val tMax = vs.filter(col("id") % 8 === sMin % 8)
         .agg(max("id")).first().getLong(0)
-      PreflowPush.fixedRounds(we, sMin, tMax, 8).orderBy("id")
+      PreflowPush.run(we, sMin, tMax, 8)._1.orderBy("id")
     }),
     // §2.6 Andersen points-to (PointsTo.cpp) as semi-naive Datalog
     // rounds over the constraint split of the edge table
@@ -527,7 +527,7 @@ object SparkEntry {
         depth = 2, matchRounds = 2, refineRounds = 2).orderBy("id")),
     "pta_sizes6" -> ((s, d) => {
       val (a, c, l, st) = TpchGraph.ptaConstraints(s, d)
-      PointsTo.sizes(PointsTo.fixedRounds(a, c, l, st, 6))
+      PointsTo.sizes(PointsTo.run(a, c, l, st, 6)._1)
         .withColumnRenamed("var", "id").orderBy("id")
     }),
 

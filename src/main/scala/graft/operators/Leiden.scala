@@ -33,15 +33,11 @@ import org.apache.spark.sql.functions._
  */
 object Leiden {
 
-  /** Refinement pass over an unweighted symmetric edge table:
-    * (id, community) → (id, community) where the output is a strict
-    * refinement of `assign` (every output community ⊆ one input
-    * community). `rounds` synchronous singleton-restart move rounds. */
-  def refine(edges: DataFrame, assign: DataFrame, rounds: Int): DataFrame =
-    refineWeighted(
-      edges.select(col("src"), col("dst"), lit(1L).as("w")), assign, rounds)
-
-  /** Weighted refinement core (also used on coarsened levels). */
+  /** Refinement pass over a weighted symmetric (src, dst, w) edge table
+    * (also used on coarsened levels): (id, community) → (id, community)
+    * where the output is a strict refinement of `assign` (every output
+    * community ⊆ one input community). `rounds` synchronous
+    * singleton-restart move rounds. */
   def refineWeighted(edges: DataFrame, assign: DataFrame,
       rounds: Int): DataFrame = {
     // intra-community edge subset: the only channel refinement moves

@@ -36,13 +36,9 @@ import org.apache.spark.sql.functions._
  */
 object Louvain {
 
-  /** Exactly `rounds` synchronous local-move rounds over an unweighted
-    * symmetric edge table: (id, community). */
-  def localMoveRounds(edges: DataFrame, rounds: Int): DataFrame =
-    localMoveRoundsWeighted(
-      edges.select(col("src"), col("dst"), lit(1L).as("w")), rounds)
-
-  /** Weighted form — also the LEVEL-2 kernel over a coarsened community
+  /** Exactly `rounds` synchronous local-move rounds over a weighted
+    * symmetric (src, dst, w) edge table: (id, community). An unweighted
+    * graph passes w = 1. Also the LEVEL-2 kernel over a coarsened community
     * graph, whose self-loops (internal edge mass) count toward k and Σtot
     * but are never move candidates (a self-loop follows its vertex into
     * any community, so it is constant across candidates). */

@@ -60,7 +60,7 @@ object Matching {
     * state's included; after the last allowed round nothing consumes the
     * remaining set, so that materialization is skipped. Callers whose
     * input is canonical by construction (Bipart's coarsening, the suite)
-    * skip [[run]]'s symmetrize+dedup exchange. */
+    * skip [[GraphOps.orientUpper]]'s symmetrize+dedup exchange. */
   def runOriented(upper: DataFrame, maxRounds: Int): (DataFrame, Int) = {
     val spark = upper.sparkSession
     import spark.implicits._
@@ -82,9 +82,4 @@ object Matching {
     }
     (matched, rounds)
   }
-
-  /** [[runOriented]] over any edge table (either orientation,
-    * duplicates allowed). */
-  def run(edges: DataFrame, maxRounds: Int = 1000): (DataFrame, Int) =
-    runOriented(GraphOps.orientUpper(edges), maxRounds)
 }

@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
  * Scale shape: pts and copy are both (long, long) relations carried as
  * distinct-deduped DataFrames; every round is equi-joins on the first
  * column — AQE handles the growth skew, and the distinct is the same
- * shuffle the join already needs. Fixed-round form for the SQL oracle;
- * `solve` iterates to convergence with one count action per round.
+ * shuffle the join already needs.
  */
 object PointsTo {
 
@@ -48,10 +47,9 @@ object PointsTo {
     * semi-naive argument), so the fixed-round oracle is unchanged; the
     * per-round work now shrinks with the frontier instead of
     * re-deriving every prior fact.
-    * Returns (pts', Δpts', copy', Δcopy'). */
+    * Returns the lazy (Δpts', Δcopy'). */
   private def round(pts: DataFrame, dPts: DataFrame, copy: DataFrame,
-      loads: DataFrame, stores: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      loads: DataFrame, stores: DataFrame): (DataFrame, DataFrame) = {
     // Load q→p: every NEW pointee o of q becomes a copy source into p
     val fromLoads = loads
       .join(dPts.withColumnRenamed("var", "q"), "q")
@@ -62,67 +60,51 @@ object PointsTo {
       .select(col("q").as("src"), col("obj").as("dst"))
     val dCopy = fromLoads.unionByName(fromStores).distinct()
       .join(copy, Seq("src", "dst"), "left_anti")
-    val copy2 = copy.unionByName(dCopy)
     // propagate: full copy over the pts delta + the copy delta over the
     // (previous) full pts — Δcopy ⋈ Δpts is covered by the first term
-    val prop = copy2
+    val prop = copy.unionByName(dCopy)
       .join(dPts.withColumnRenamed("var", "src"), "src")
       .select(col("dst").as("var"), col("obj"))
       .unionByName(dCopy
         .join(pts.withColumnRenamed("var", "src"), "src")
         .select(col("dst").as("var"), col("obj")))
     val dPts2 = prop.distinct().join(pts, Seq("var", "obj"), "left_anti")
-    (pts.unionByName(dPts2), dPts2, copy2, dCopy)
+    (dPts2, dCopy)
   }
 
-  /** Exactly `rounds` BSP rounds (the oracle shape): pts as (var, obj). */
-  def fixedRounds(addressOf: DataFrame, copies: DataFrame,
-      loads: DataFrame, stores: DataFrame, rounds: Int): DataFrame = {
-    var pts = addressOf.select(col("var"), col("obj")).distinct()
-      .transform(Materialize(_))
+  /** At most `maxRounds` BSP rounds: (pts as (var, obj), rounds run).
+    * The loop stops when Δpts is empty: the next round would derive no
+    * copy edges and propagate nothing, and every completed copy⋈pts
+    * product is already ⊆ pts (the semi-naive invariant) — so every
+    * later round is the identity and a bound below the fixpoint keeps
+    * the oracle's unroll exact. Each Δpts row count rides the pass that
+    * materializes it; the start count rides the first checkpoint. */
+  def run(addressOf: DataFrame, copies: DataFrame, loads: DataFrame,
+      stores: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
+    val n = count(lit(1)).as("n")
+    val start = Materialize.observed(
+      addressOf.select(col("var"), col("obj")).distinct(), n)
+    var pts = start.df
     var dPts = pts // round 1: everything is new
+    var frontier = start.long("n")
     var copy = copies.select(col("src"), col("dst")).distinct()
       .transform(Materialize(_))
+    var rounds = 0
     // only the two DELTAS are materialized per round (concurrently —
     // one latency); the full pts/copy relations stay LAZY unions of the
     // already-checkpointed deltas, so the heavy prop ∪ distinct ∪
-    // anti-join pipeline runs once per round instead of twice (the old
-    // shape checkpointed pts ∪ Δ and Δ separately, re-deriving Δ's
-    // whole dataflow inside both jobs). Union trees over checkpointed
-    // leaves stay O(rounds) deep — no lineage blow-up.
-    for (_ <- 1 to rounds) {
-      val (_, d2, _, dc) = round(pts, dPts, copy, loads, stores)
-      val (dNext, dCopy) = Par.both(Materialize(d2), Materialize(dc))
-      dPts = dNext
+    // anti-join pipeline runs once per round. Union trees over
+    // checkpointed leaves stay O(rounds) deep — no lineage blow-up.
+    while (frontier > 0 && rounds < maxRounds) {
+      val (d2, dc) = round(pts, dPts, copy, loads, stores)
+      val (o, dCopy) = Par.both(Materialize.observed(d2, n), Materialize(dc))
+      dPts = o.df
+      frontier = o.long("n")
       pts = pts.unionByName(dPts)
       copy = copy.unionByName(dCopy)
+      rounds += 1
     }
-    pts
-  }
-
-  /** Iterate to the least fixpoint. Convergence = the pts DELTA is
-    * empty: with Δpts = ∅ the next round derives no copy edges and
-    * propagates nothing, and every completed copy⋈pts product is
-    * already ⊆ pts (the semi-naive invariant) — so one count action on
-    * the (shrinking) delta per round decides termination. */
-  def solve(addressOf: DataFrame, copies: DataFrame, loads: DataFrame,
-      stores: DataFrame, maxRounds: Int = 50): DataFrame = {
-    var pts = addressOf.select(col("var"), col("obj")).distinct()
-      .transform(Materialize(_))
-    var dPts = pts
-    var copy = copies.select(col("src"), col("dst")).distinct()
-      .transform(Materialize(_))
-    var it = 0
-    var frontier = dPts.count()
-    while (frontier > 0 && it < maxRounds) {
-      val (_, d2, _, dc) = round(pts, dPts, copy, loads, stores)
-      dPts = Materialize(d2)
-      copy = copy.unionByName(Materialize(dc))
-      pts = pts.unionByName(dPts)
-      frontier = dPts.count()
-      it += 1
-    }
-    pts
+    (pts, rounds)
   }
 
   /** Per-variable pts-set sizes: (var, npts) — the summary the

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.exec.{Materialize, Par}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,13 +27,13 @@ import org.apache.spark.sql.functions._
  *     concurrently WITH the pushes could overshoot a fresh reverse arc.
  *
  * Source is pre-saturated (every s-arc pushed full), h(s) = |V|. At the
- * fixpoint (no active vertices) excess(t) is the max flow.
+ * fixpoint (no active vertices) excess(t) is the max flow and every
+ * other vertex but s holds no excess: a further round pushes nothing and
+ * relabels nothing.
  *
  * Scale shape: the arc table (u, v, res) is the only O(E) state; each
  * phase is equi-joins of arcs against the O(V) height/excess tables plus
  * a per-vertex window — the same join-per-superstep budget as SSSP.
- * Fixed-round form for the SQL oracle; `maxFlow` runs to the fixpoint
- * with one observed count per round.
  */
 object PreflowPush {
 
@@ -43,10 +43,10 @@ object PreflowPush {
   // round (measured minutes of driver CPU in BigInteger products by
   // round 8).
 
-  /** (arcs (u,v,res), excess (id,ex), heights (id,h), n) initial state
+  /** (arcs (u,v,res), excess (id,ex), heights (id,h)) initial state
     * with the source saturated. Parallel/reverse input edges merge. */
   private def init(edges: DataFrame, s: Long)
-      : (DataFrame, DataFrame, DataFrame, Long) = {
+      : (DataFrame, DataFrame, DataFrame) = {
     val arcs0 = edges.select(col("u"), col("v"), col("cap"))
       .unionByName(edges.select(col("v").as("u"), col("u").as("v"),
         lit(0L).as("cap")))
@@ -73,12 +73,14 @@ object PreflowPush {
           .otherwise(coalesce(col("sres"), lit(0L))).as("ex"))
     val h = verts.select(col("id"),
       when(col("id") === s, lit(n)).otherwise(lit(0L)).as("h"))
-    (arcs, ex, h, n)
+    (arcs, ex, h)
   }
 
-  /** One superstep: push phase + relabel phase. */
+  /** One superstep: push phase + relabel phase. Returns the new arcs,
+    * excess and heights, and the count of active vertices (ex > 0, not
+    * s or t) observed on the excess pass. */
   private def round(arcs: DataFrame, ex: DataFrame, h: DataFrame,
-      s: Long, t: Long): (DataFrame, DataFrame, DataFrame) = {
+      s: Long, t: Long): (DataFrame, DataFrame, DataFrame, Long) = {
     val w = Window.partitionBy(col("u")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pushes = arcs
@@ -135,46 +137,28 @@ object PreflowPush {
               coalesce(col("adm"), lit(0L)) === 0L,
             coalesce(col("mh") + 1, col("h"))).otherwise(col("h")).as("h"))
     }
-    val Vector(arcs2, ex2, h2) = Par.map(Seq(() => arcs2Plan, () => ex2Plan,
-      () => h2Plan), 3)(plan => Materialize(plan()))
-    (arcs2, ex2, h2)
+    val active = sum(when(col("ex") > 0 && col("id") =!= s &&
+      col("id") =!= t, 1L).otherwise(0L)).as("active")
+    val (ex2, (arcs2, h2)) = Par.both(Materialize.observed(ex2Plan, active),
+      Par.both(Materialize(arcs2Plan), Materialize(h2Plan)))
+    (arcs2, ex2.df, h2, ex2.long("active"))
   }
 
-  /** Exactly `rounds` supersteps over (u, v, cap) edges (the SQL-oracle
-    * shape): per-vertex (id, ex, h) state. */
-  def fixedRounds(edges: DataFrame, s: Long, t: Long,
-      rounds: Int): DataFrame = {
-    var (arcs, ex, h, _) = init(edges, s)
-    for (_ <- 1 to rounds) {
-      val (a2, e2, h2) = round(arcs, ex, h, s, t)
-      arcs = a2; ex = e2; h = h2
-    }
-    ex.join(h, "id").select(col("id"), col("ex"), col("h"))
-  }
-
-  /** The max-flow value excess(t), via the SINK-PHASE early exit: a
-    * vertex lifted to height ≥ n can never route excess to t again (its
-    * excess can only drain back to s), so once every active vertex sits
-    * at h ≥ n, excess(t) is final — the full second phase that returns
-    * trapped excess to the source only restores flow conservation, never
-    * the flow value. (The reference runs global relabeling for the same
-    * reason — to shortcut the long trapped-excess tail,
-    * Preflowpush.cpp's global_relabel_interval.) */
-  def maxFlow(edges: DataFrame, s: Long, t: Long,
-      maxRounds: Int = 10000): Long = {
-    var (arcs, ex, h, n) = init(edges, s)
+  /** At most `maxRounds` supersteps over (u, v, cap) edges: per-vertex
+    * (id, ex, h) state, rounds run. The loop stops at the fixpoint, the
+    * first round after which no vertex but s and t holds excess; every
+    * later round is the identity, so a bound below it keeps the oracle's
+    * unroll exact. excess(t) is the max flow. */
+  def run(edges: DataFrame, s: Long, t: Long,
+      maxRounds: Int = 10000): (DataFrame, Int) = {
+    var (arcs, ex, h) = init(edges, s)
     var active = 1L
-    var it = 0
-    while (active > 0 && it < maxRounds) {
-      val (a2, e2, h2) = round(arcs, ex, h, s, t)
-      arcs = a2; ex = e2; h = h2
-      active = ex.join(h, "id")
-        .filter(col("ex") > 0 && col("id") =!= s && col("id") =!= t &&
-          col("h") < n)
-        .count()
-      it += 1
+    var rounds = 0
+    while (active > 0 && rounds < maxRounds) {
+      val (a2, e2, h2, n) = round(arcs, ex, h, s, t)
+      arcs = a2; ex = e2; h = h2; active = n
+      rounds += 1
     }
-    ex.filter(col("id") === t).select(col("ex"))
-      .collect().headOption.map(_.getLong(0)).getOrElse(0L)
+    (ex.join(h, "id").select(col("id"), col("ex"), col("h")), rounds)
   }
 }

@@ -10,19 +10,19 @@ import org.apache.spark.sql.functions._
  * variants; SURVEY.md §2.6). Delta-stepping's bucketed worklist is a
  * shared-memory scheduling order; its BSP fixpoint is plain Bellman-Ford
  * relaxation rounds, which is what a bulk-synchronous engine runs — same
- * distances, O(E_frontier) per round.
+ * distances.
  *
  * Two weight surfaces, matching the reference's two graph shapes:
  *  - REAL edge weights (the reference default: `.gr` edge payloads,
  *    graph-convert.cpp:118-131, consumed at SSSP.cpp:58-84) — adjacency
  *    built with [[Adjacency.buildWeighted]], whose blocks carry a `ws`
- *    array aligned with `dsts`; see [[weightedFixedRounds]]/[[runWeighted]].
+ *    array aligned with `dsts`;
  *  - synthetic weights for weightless edge tables ([[syntheticWeight]]:
  *    1 + (src + dst) mod 9, replicable in plain integer SQL).
  *
  * State holds reached vertices only; unlike BFS, a reached vertex CAN
- * improve (shorter weighted path arrives later), so the frontier is
- * "improved last round" rather than "new last round".
+ * improve (a shorter weighted path arrives later), so every round
+ * relaxes from all reached vertices and min-folds into the state.
  */
 object Sssp {
 
@@ -48,36 +48,19 @@ object Sssp {
       .select(col("z.dsts").as("id"), (col("dist") + col("z.ws")).as("dist"))
       .groupBy("id").agg(min(col("dist")).as("dist"))
 
-  /** Exactly k relaxation rounds (the SQL-oracle kernel): every vertex
-    * reachable within k hops, with its best ≤k-hop weighted distance. */
-  def fixedRounds(adj: Adjacency, source: Long, k: Int): DataFrame =
-    loopFixed(adj, source, k, scatter)
-
-  /** Exactly k rounds over REAL edge weights (weighted adjacency). */
-  def weightedFixedRounds(adj: Adjacency, source: Long, k: Int): DataFrame =
-    loopFixed(adj, source, k, scatterWeighted)
-
-  /** Zero distance in the graph's weight type (long for the synthetic /
-    * integer-weighted paths, double for real-valued `ws`), so unions and
-    * relaxations never mix types. */
-  private def zeroDist(adj: Adjacency): Column = {
-    val t = adj.blocks.schema.fields.find(_.name == "ws")
-      .map(_.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
-        .elementType)
-      .getOrElse(org.apache.spark.sql.types.LongType)
-    lit(0L).cast(t)
-  }
-
-  // NOTE (r6): routing this through the improved-frontier fixpoint loop
-  // (full outer join per round) was tried and MEASURED 2x slower at the
-  // driver fixture (sssp_weighted4 4.3 s -> 11.2 s): with k = 4 the
-  // all-vertices scatter + min-fold union is the cheaper per-round plan,
-  // and the frontier machinery only pays off in the long-tail fixpoint
-  // loop below. Kept as the simple union form on purpose.
-  private def loopFixed(adj: Adjacency, source: Long, k: Int,
-      relax: (Adjacency, DataFrame) => DataFrame): DataFrame = {
+  /** Exactly k relaxation rounds: every vertex reachable within k hops,
+    * with its best ≤k-hop weighted distance. The weights follow the
+    * adjacency's schema, like [[zeroDist]]: blocks with a `ws` array
+    * ([[Adjacency.buildWeighted]]) relax over their real weights, blocks
+    * without one over [[syntheticWeight]]. */
+  def fixedRounds(adj: Adjacency, source: Long, k: Int): DataFrame = {
     val spark = adj.blocks.sparkSession
     import spark.implicits._
+    val relax =
+      if (adj.blocks.schema.fieldNames.contains("ws")) scatterWeighted _
+      else scatter _
+    // no early exit: carrying the old distance through the min-fold to
+    // detect a fixpoint measured 12% slower at k = 4
     var state = Seq(source).toDF("id")
       .select(col("id"), zeroDist(adj).as("dist")).transform(Materialize(_))
     for (_ <- 1 to k) {
@@ -88,40 +71,14 @@ object Sssp {
     state
   }
 
-  /** Bellman-Ford to fixpoint with an improved-vertices frontier:
-    * (distances (id, dist), rounds). */
-  def run(adj: Adjacency, source: Long, maxIter: Int = 10000): (DataFrame, Int) =
-    loopFixpoint(adj, source, maxIter, scatter)
-
-  /** Fixpoint over REAL edge weights (weighted adjacency). */
-  def runWeighted(adj: Adjacency, source: Long,
-      maxIter: Int = 10000): (DataFrame, Int) =
-    loopFixpoint(adj, source, maxIter, scatterWeighted)
-
-  private def loopFixpoint(adj: Adjacency, source: Long, maxIter: Int,
-      relax: (Adjacency, DataFrame) => DataFrame): (DataFrame, Int) = {
-    val spark = adj.blocks.sparkSession
-    import spark.implicits._
-    var state = Seq(source).toDF("id")
-      .select(col("id"), zeroDist(adj).as("dist"), lit(true).as("improved"))
-      .transform(Materialize(_))
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxIter) {
-      val frontier = state.filter(col("improved"))
-      val cand = relax(adj, frontier)
-      val o = Materialize.observed(state
-        .join(cand.withColumnRenamed("dist", "nd"), Seq("id"), "full")
-        .select(col("id"),
-          least(coalesce(col("dist"), col("nd")),
-            coalesce(col("nd"), col("dist"))).as("dist"),
-          (col("dist").isNull ||
-            (col("nd").isNotNull && col("nd") < col("dist"))).as("improved")),
-        sum(when(col("improved"), 1L).otherwise(0L)).as("n"))
-      state = o.df
-      changed = o.long("n")
-      rounds += 1
-    }
-    (state.select(col("id"), col("dist")), rounds)
+  /** Zero distance in the graph's weight type (long for the synthetic /
+    * integer-weighted paths, double for real-valued `ws`), so unions and
+    * relaxations never mix types. */
+  private def zeroDist(adj: Adjacency): Column = {
+    val t = adj.blocks.schema.fields.find(_.name == "ws")
+      .map(_.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+        .elementType)
+      .getOrElse(org.apache.spark.sql.types.LongType)
+    lit(0L).cast(t)
   }
 }

@@ -90,7 +90,9 @@ object Triangles {
   /** End-to-end: clean → symmetrize → degree-orient → two-join count. */
   def count(edges: DataFrame): Long = countOriented(orientByDegree(edges))
 
-  /** Per-vertex credits over a precomputed triangle listing. */
+  /** Per-vertex triangle participation counts over a precomputed triangle
+    * listing (each triangle credited to all three corners), over all
+    * `vertices` (0 for none). */
   def perVertexFrom(tris: DataFrame, vertices: DataFrame): DataFrame = {
     val credits = tris.select(col("a").as("id"))
       .union(tris.select(col("b").as("id")))
@@ -100,9 +102,4 @@ object Triangles {
       .join(credits, Seq("id"), "left")
       .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
   }
-
-  /** Per-vertex triangle participation counts (each triangle credited to
-    * all three corners), over all vertices (0 for none). */
-  def perVertex(edges: DataFrame): DataFrame =
-    perVertexFrom(listing(orientByDegree(edges)), GraphOps.vertices(edges))
 }

@@ -3,7 +3,7 @@ package graft.plans
 import graft.exec.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -21,6 +21,36 @@ import org.apache.spark.storage.StorageLevel
  */
 object Ranking {
 
+  /** The pinned-offset plan both rankings share: range-partition `df` on
+    * `sortExprs` and persist it, collect each partition's `total`, and
+    * broadcast-join the exclusive prefix of those totals as `__offset`
+    * next to `__local`, the per-partition `local` window value. `outCol`
+    * is `out` cast to long. Returns (lazy plan, pinned partitioning). */
+  private def pinnedOffsetPlan(df: DataFrame, sortExprs: Seq[Column],
+      numPartitions: Int, total: Column, local: WindowSpec => Column,
+      outCol: String, out: Column): (DataFrame, DataFrame) = {
+    val spark = df.sparkSession
+    // persist pins the SAMPLED range boundaries: the offsets below are
+    // computed against exactly this partitioning
+    val parts = df.repartitionByRange(numPartitions, sortExprs: _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val withPid = parts.withColumn("__pid", spark_partition_id())
+    val totals = withPid.groupBy("__pid").agg(total).orderBy("__pid").collect()
+    var acc = 0L
+    val offsets = totals.map { r =>
+      val o = (r.getInt(0), acc); acc += r.getLong(1); o
+    }
+    import spark.implicits._
+    val offsetsDf = offsets.toSeq.toDF("__pid", "__offset")
+    val w = Window.partitionBy("__pid").orderBy(sortExprs: _*)
+    val plan = withPid
+      .withColumn("__local", local(w))
+      .join(broadcast(offsetsDf), "__pid")
+      .withColumn(outCol, out.cast("long"))
+      .drop("__pid", "__local", "__offset")
+    (plan, parts)
+  }
+
   /** Lazy ranked plan over a pinned range partitioning. Exposed for the
     * plan-shape spec (no SinglePartition exchange) — callers use
     * [[globalRank]], which materializes before releasing the pin. */
@@ -28,28 +58,9 @@ object Ranking {
       df: DataFrame,
       sortExprs: Seq[Column],
       rankCol: String,
-      numPartitions: Int): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
-    // persist pins the SAMPLED range boundaries: the offsets below are
-    // computed against exactly this partitioning
-    val parts = df.repartitionByRange(numPartitions, sortExprs: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val withPid = parts.withColumn("__pid", spark_partition_id())
-    val counts = withPid.groupBy("__pid").count().orderBy("__pid").collect()
-    var acc = 0L
-    val offsets = counts.map { r =>
-      val o = (r.getInt(0), acc); acc += r.getLong(1); o
-    }
-    import spark.implicits._
-    val offsetsDf = offsets.toSeq.toDF("__pid", "__offset")
-    val w = Window.partitionBy("__pid").orderBy(sortExprs: _*)
-    val ranked = withPid
-      .withColumn("__local", row_number().over(w))
-      .join(broadcast(offsetsDf), "__pid")
-      .withColumn(rankCol, (col("__offset") + col("__local") - 1).cast("long"))
-      .drop("__pid", "__local", "__offset")
-    (ranked, parts)
-  }
+      numPartitions: Int): (DataFrame, DataFrame) =
+    pinnedOffsetPlan(df, sortExprs, numPartitions, count(lit(1)),
+      row_number().over(_), rankCol, col("__offset") + col("__local") - 1)
 
   /** Lazy tiered-cumsum plan over a pinned range partitioning — exposed
     * for the plan-shape spec, like [[globalRankPlan]]. */
@@ -58,28 +69,11 @@ object Ranking {
       sortExprs: Seq[Column],
       valueCol: String,
       cumCol: String,
-      numPartitions: Int): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
-    val parts = df.repartitionByRange(numPartitions, sortExprs: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val withPid = parts.withColumn("__pid", spark_partition_id())
-    val sums = withPid.groupBy("__pid")
-      .agg(sum(col(valueCol)).as("__s")).orderBy("__pid").collect()
-    var acc = 0L
-    val offsets = sums.map { r =>
-      val o = (r.getInt(0), acc); acc += r.getLong(1); o
-    }
-    import spark.implicits._
-    val offsetsDf = offsets.toSeq.toDF("__pid", "__offset")
-    val w = Window.partitionBy("__pid").orderBy(sortExprs: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = withPid
-      .withColumn("__local", sum(col(valueCol)).over(w))
-      .join(broadcast(offsetsDf), "__pid")
-      .withColumn(cumCol, (col("__offset") + col("__local")).cast("long"))
-      .drop("__pid", "__local", "__offset")
-    (out, parts)
-  }
+      numPartitions: Int): (DataFrame, DataFrame) =
+    pinnedOffsetPlan(df, sortExprs, numPartitions, sum(col(valueCol)),
+      w => sum(col(valueCol)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+      cumCol, col("__offset") + col("__local"))
 
   /** df + `cumCol` = the INCLUSIVE running sum of `valueCol` in global
     * `sortExprs` order — `sum(value) over (ORDER BY …)` WITHOUT a

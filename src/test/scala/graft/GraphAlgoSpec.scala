@@ -10,6 +10,10 @@ class GraphAlgoSpec extends AnyFunSuite {
   private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** An unweighted edge table as the weighted (src, dst, w = 1) form. */
+  private def unitW(e: org.apache.spark.sql.DataFrame) =
+    e.select(col("src"), col("dst"), lit(1L).as("w"))
+
   test("connected components match union-find oracle exactly") {
     val res = ConnectedComponents.run(symAdj)
     assert(res.converged)
@@ -58,7 +62,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     val cl = (for (base <- Seq(0L, 10L); a <- base until base + 5;
       b <- (a + 1) until base + 5) yield (a, b)) :+ (4L, 10L)
     val e = GraphOps.symmetrize(df(cl))
-    val got = Louvain.localMoveRounds(e, 5)
+    val got = Louvain.localMoveRoundsWeighted(unitW(e), 5)
     val m = labelMap(got.select(col("id"), col("community")))
     // each clique collapses to one community
     assert((0L to 4L).map(m).toSet.size == 1)
@@ -70,7 +74,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     assert(Louvain.modularityI4(e, got) >
       Louvain.modularityI4(e, singletons))
     // deterministic across reruns
-    assert(labelMap(Louvain.localMoveRounds(e, 5)
+    assert(labelMap(Louvain.localMoveRoundsWeighted(unitW(e), 5)
       .select(col("id"), col("community"))) == m)
   }
 
@@ -80,8 +84,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     val cl = (for (base <- Seq(0L, 10L); a <- base until base + 5;
       b <- (a + 1) until base + 5) yield (a, b)) :+ (4L, 10L)
     val e = GraphOps.symmetrize(df(cl))
-    val w1 = e.select(col("src"), col("dst"), lit(1L).as("w"))
-    val l1 = Louvain.localMoveRounds(e, 2)
+    val w1 = unitW(e)
+    val l1 = Louvain.localMoveRoundsWeighted(w1, 2)
     // aggregation conserves total edge mass (2m) — self-loops included
     val coarse = Louvain.coarsen(w1, l1)
     assert(coarse.agg(sum("w")).first().getLong(0) == e.count())
@@ -116,8 +120,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       b <- (a + 1) until base + 5) yield (a, b)
     val e = GraphOps.symmetrize(df(cl))
     val allOne = (0L to 4L).map(v => (v, 0L)) ++ (10L to 14L).map(v => (v, 0L))
-    val refined = labelMap(Leiden.refine(
-      e, allOne.toDF("id", "community"), 4).select("id", "community"))
+    val refined = labelMap(Leiden.refineWeighted(
+      unitW(e), allOne.toDF("id", "community"), 4).select("id", "community"))
     // split: each clique one sub-community, never merged across
     assert((0L to 4L).map(refined).toSet.size == 1)
     assert((10L to 14L).map(refined).toSet.size == 1)
@@ -125,8 +129,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     // strict-refinement invariant on the web fixture: every refined
     // sub-community lies inside exactly one louvain community
     val sym = GraphOps.symmetrize(web.edges)
-    val comm = Louvain.localMoveRounds(sym, 2)
-    val sub = Leiden.refine(sym, comm, 2)
+    val comm = Louvain.localMoveRoundsWeighted(unitW(sym), 2)
+    val sub = Leiden.refineWeighted(unitW(sym), comm, 2)
     val parents = sub.withColumnRenamed("community", "sub")
       .join(comm, "id")
       .groupBy("sub").agg(countDistinct("community").as("np"))
@@ -234,15 +238,25 @@ class GraphAlgoSpec extends AnyFunSuite {
       (2L, 1L, 4L), (1L, 3L, 12L), (3L, 2L, 9L), (2L, 4L, 14L),
       (4L, 3L, 7L), (3L, 5L, 20L), (4L, 5L, 4L))
     assert(TestOracles.maxFlowEk(net, 0L, 5L) == 23L)
-    assert(PreflowPush.maxFlow(net.toDF("u", "v", "cap"), 0L, 5L) == 23L)
-    // deterministic capacities over a fixture subgraph, engine == oracle
+    val (state, rounds) = PreflowPush.run(net.toDF("u", "v", "cap"), 0L, 5L)
+    val ex = labelMap(state.select("id", "ex"))
+    assert(ex(5L) == 23L)
+    assert(rounds == 12)
+    // flow conservation at the fixpoint: only s and t hold excess
+    assert(ex.forall { case (v, x) => v == 0L || v == 5L || x == 0L }, ex)
+    // deterministic capacities over a fixture subgraph, engine == oracle;
+    // t is the vertex with the largest flow from s, so the case cannot
+    // pass on a zero flow
     val sub = edgeArray.take(60).map { case (a, b) =>
       (a, b, 1L + (a * 7 + b * 13) % 9)
     }
     val ids = sub.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    val (s, t) = (ids.head, ids.last)
-    assert(PreflowPush.maxFlow(sub.toSeq.toDF("u", "v", "cap"), s, t) ==
-      TestOracles.maxFlowEk(sub.toSeq, s, t))
+    val s = ids.head
+    val (t, flow) =
+      ids.tail.map(t => t -> TestOracles.maxFlowEk(sub.toSeq, s, t)).maxBy(_._2)
+    assert(flow > 0L)
+    val (subState, _) = PreflowPush.run(sub.toSeq.toDF("u", "v", "cap"), s, t)
+    assert(labelMap(subState.select("id", "ex"))(t) == flow)
   }
 
   test("Points-to: BSP semi-naive rounds match the sequential Andersen " +
@@ -260,16 +274,11 @@ class GraphAlgoSpec extends AnyFunSuite {
     def toMapSet(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val got = toMapSet(PointsTo.solve(ao.toDF("var", "obj"),
+    val (pts, rounds) = PointsTo.run(ao.toDF("var", "obj"),
       cp.toDF("src", "dst"), ld.toDF("q", "p"), st.toDF("q", "p"))
-      .collect())
-    assert(got == oracle)
-    // a generous fixed-round unroll reaches the same least model — the
-    // oracle-SQL shape and the converged engine agree
-    val fr = toMapSet(PointsTo.fixedRounds(ao.toDF("var", "obj"),
-      cp.toDF("src", "dst"), ld.toDF("q", "p"), st.toDF("q", "p"), 20)
-      .collect())
-    assert(fr == oracle)
+    assert(toMapSet(pts.collect()) == oracle)
+    // three rounds derive new facts; the fourth finds Δpts empty
+    assert(rounds == 4)
   }
 
   test("Matrix completion: alternating fixed-point rounds reduce SSE " +
@@ -335,7 +344,9 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("per-vertex triangle credit sums to 3x count") {
-    val pv = Triangles.perVertex(web.edges)
+    val pv = Triangles.perVertexFrom(
+      Triangles.listing(Triangles.orientByDegree(web.edges)),
+      GraphOps.vertices(web.edges))
     val total = pv.agg(sum("triangles")).first().getLong(0)
     assert(total == 3 * TestOracles.triangles(edgeArray))
   }
@@ -424,9 +435,6 @@ class GraphAlgoSpec extends AnyFunSuite {
     val d2 = w(1, 2)
     val d3 = math.min(w(1, 3), d2 + w(2, 3))
     val expected = Map(1L -> 0L, 2L -> d2, 3L -> d3, 4L -> (d3 + w(3, 4)))
-    val (dist, rounds) = Sssp.run(adj, 1L)
-    assert(labelMap(dist) == expected)
-    assert(rounds <= 5)
     assert(labelMap(Sssp.fixedRounds(adj, 1L, 10)) == expected)
     adj.unpersist()
   }
@@ -455,7 +463,7 @@ class GraphAlgoSpec extends AnyFunSuite {
   test("greedy matching is a valid maximal matching and deterministic") {
     val e = df(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (1L, 6L), (2L, 5L)))
-    val (m, rounds) = Matching.run(e)
+    val (m, rounds) = Matching.runOriented(GraphOps.orientUpper(e), 1000)
     val pairs = m.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val matchedV = pairs.flatMap(t => Set(t._1, t._2))
     // validity: no vertex matched twice
@@ -467,7 +475,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       assert(matchedV(a) || matchedV(b), s"edge ($a,$b) unmatched")
     }
     assert(rounds == 3)
-    assert(Matching.run(e, 6)._1.collect()
+    assert(Matching.runOriented(GraphOps.orientUpper(e), 6)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == pairs)
   }
 
@@ -597,11 +605,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       (3L, 4L, 7L), (4L, 5L, 1L)).toDF("src", "dst", "w")
     val adj = Adjacency.buildWeighted(we)
     val expect = Map(1L -> 0L, 3L -> 1L, 2L -> 2L, 4L -> 8L, 5L -> 9L)
-    val (dist, _) = Sssp.runWeighted(adj, 1L)
-    assert(dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      == expect)
-    assert(Sssp.weightedFixedRounds(adj, 1L, 6).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
+    // fixedRounds reads the blocks' ws arrays, not the synthetic weights
+    assert(labelMap(Sssp.fixedRounds(adj, 1L, 6)) == expect)
     adj.unpersist()
   }
 
@@ -650,8 +655,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     val adj = Adjacency.buildWeighted(we)
     Adjacency.save(adj, "target/wadj-spec")
     val back = Adjacency.load(spark, "target/wadj-spec")
-    val distA = labelMap(Sssp.weightedFixedRounds(adj, 1L, 4))
-    val distB = labelMap(Sssp.weightedFixedRounds(back, 1L, 4))
+    val distA = labelMap(Sssp.fixedRounds(adj, 1L, 4))
+    val distB = labelMap(Sssp.fixedRounds(back, 1L, 4))
     assert(distA == distB && distA.nonEmpty)
     adj.unpersist(); back.unpersist()
   }
@@ -784,7 +789,9 @@ class GraphAlgoSpec extends AnyFunSuite {
     val g = df(bruteEdges)
     val row = Mining.motif4(g, Triangles.count(g),
       Mining.kcliqueCount(g, 4), Mining.cycle4Count(g),
-      Mining.diamondCount(g), Triangles.perVertex(g)).collect()(0)
+      Mining.diamondCount(g), Triangles.perVertexFrom(
+        Triangles.listing(Triangles.orientByDegree(g)), GraphOps.vertices(g)))
+      .collect()(0)
     assert((row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3),
       row.getLong(4), row.getLong(5)) == ((path4, star4, cyc4, paw, dia, k4)),
       s"engine ${row.toSeq} vs brute ($path4,$star4,$cyc4,$paw,$dia,$k4)")

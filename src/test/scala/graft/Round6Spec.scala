@@ -26,7 +26,7 @@ class Round6Spec extends AnyFunSuite {
   test("louvain moveRounds resumed at round 3 == uninterrupted 3 rounds") {
     val e = GraphOps.symmetrize(df(randEdges))
     val w1 = e.select(col("src"), col("dst"), lit(1L).as("w"))
-    val full = labelMap(Louvain.localMoveRounds(e, 3)
+    val full = labelMap(Louvain.localMoveRoundsWeighted(w1, 3)
       .select(col("id"), col("community")))
     val two = Louvain.localMoveRoundsWeighted(w1, 2)
     val resumed = labelMap(
@@ -37,10 +37,12 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("matching over pre-oriented canonical edges == generic path") {
-    val upper = GraphOps.orientUpper(df(randEdges))
-    val a = Matching.run(df(randEdges), 3)._1.collect()
+    // randEdges is canonical already (a < b, one row per edge); the
+    // generic path gets it with every edge also reversed and repeated
+    val generic = df(randEdges ++ randEdges.map(_.swap) ++ randEdges)
+    val a = Matching.runOriented(GraphOps.orientUpper(generic), 3)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Matching.runOriented(upper, 3)._1.collect()
+    val b = Matching.runOriented(df(randEdges), 3)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
   }

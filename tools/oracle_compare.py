@@ -1,7 +1,10 @@
-import duckdb, json, glob, sys
+import duckdb, json, glob, os, sys
 import pyarrow.parquet as pq
 sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.001'
-out = sys.argv[2] if len(sys.argv) > 2 else '/root/repo/target/verify_smoke'
+# default: target/verify_smoke in the checkout this script lives in
+checkout = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+    checkout, 'target', 'verify_smoke')
 only = set(sys.argv[3].split(',')) if len(sys.argv) > 3 else None
 con = duckdb.connect()
 for t in ['lineitem','orders','customer','supplier','part','nation',

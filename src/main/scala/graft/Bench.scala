@@ -222,10 +222,11 @@ object Bench {
     (e.toLong, eps.toDouble)
   }
 
-  /** Write `line` to target/bench_last.json (overwriting — the file
-    * always holds the most complete artifact so far). */
+  /** Write `line` to target/bench_last.json under the working directory
+    * (overwriting — the file always holds the most complete artifact so
+    * far). `sbt run` forks the JVM in the checkout root. */
   private def writeArtifact(line: String): Unit = {
-    val f = new java.io.File("/root/repo/target/bench_last.json")
+    val f = new java.io.File("target/bench_last.json")
     f.getParentFile.mkdirs()
     val w = new java.io.PrintWriter(f)
     try w.println(line) finally w.close()

@@ -34,7 +34,7 @@ object SparkEntry {
     memo(s, d, "sym")(Adjacency.build(symE(s, d)))
   private def adjWeighted(s: SparkSession, d: String): Adjacency =
     memo(s, d, "wdir")(
-      Adjacency.buildWeighted(GraphOps.attachWeights(edgesE(s, d))))
+      Adjacency.build(GraphOps.attachWeights(edgesE(s, d))))
   private def ranks10(s: SparkSession, d: String): DataFrame =
     memo(s, d, "pr10")(rankN(PageRank.topoFixed(adjDir(s, d), 10)))
   private def ccComps(s: SparkSession, d: String): DataFrame =
@@ -82,7 +82,7 @@ object SparkEntry {
         .transform(Materialize(_)))
 
   // Scalar memos for the heavy mining counts: triangles/motif_3/motif_4
-  // share one 2-join enumeration, kclique_4/motif_4 one candidate-set
+  // share one triangle listing, kclique_4/motif_4 one candidate-set
   // cascade, sgl_cycle/sgl_diamond/motif_4 one wedge pass and one
   // edge-credit pass each (the r4 verdict flagged motif_3 re-counting
   // triangles as 14 s of duplicated suite work).
@@ -90,13 +90,13 @@ object SparkEntry {
     memo(s, d, "tri")(triListE(s, d).count())
   private def k4Count(s: SparkSession, d: String): Long =
     memo(s, d, "k4")(
-      Mining.kcliqueCountOriented(orientedE(s, d), 4, Some(olistE(s, d))))
+      Mining.kcliqueCount(orientedE(s, d), 4, olistE(s, d)))
   private def c4Count(s: SparkSession, d: String): Long =
-    memo(s, d, "c4")(Mining.cycle4CountFrom(symE(s, d), symDeg(s, d)))
+    memo(s, d, "c4")(Mining.cycle4Count(symE(s, d), symDeg(s, d)))
   private def diaCount(s: SparkSession, d: String): Long =
-    memo(s, d, "dia")(Mining.diamondCountFrom(triListE(s, d)))
+    memo(s, d, "dia")(Mining.diamondCount(triListE(s, d)))
   private def triPerV(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "tripv")(Materialize(Triangles.perVertexFrom(triListE(s, d),
+    memo(s, d, "tripv")(Materialize(Triangles.perVertex(triListE(s, d),
       GraphOps.vertices(edgesE(s, d)))))
 
   // Community-detection shared states: leiden_2x2/leiden_2level run the
@@ -211,8 +211,7 @@ object SparkEntry {
     // k-truss support peel (SURVEY §2.6), 2 fixed rounds at trussNum 4,
     // sharing the suite's one orientation + triangle listing
     "ktruss_4" -> ((s, d) =>
-      KTruss.run(edgesE(s, d), 4, 2,
-        Some((orientedE(s, d), triListE(s, d))))._1
+      KTruss.run(orientedE(s, d), triListE(s, d), 4, 2)._1
         .orderBy("src", "dst")),
     // deterministic greedy maximal matching (SURVEY §2.6), 3 rounds
     "matching_3" -> ((s, d) =>
@@ -391,7 +390,7 @@ object SparkEntry {
     // weighted community graph, 2 rounds there, project back — the
     // level-1 state is the shared round-2 memo
     "louvain_2level" -> ((s, d) =>
-      Louvain.twoLevelFrom(w1E(s, d), louvComm2(s, d), 2).orderBy("id")),
+      Louvain.twoLevel(w1E(s, d), louvComm2(s, d), 2).orderBy("id")),
     // Leiden (leidenClustering.cpp): local-move + singleton-restart
     // refinement constrained to intra-community edges, and — in the
     // 2-level form — aggregation on the REFINED partition seeded from
@@ -399,7 +398,7 @@ object SparkEntry {
     // 2) state; leiden_2level adds only the coarse level on top.
     "leiden_2x2" -> ((s, d) => leidenSubM(s, d).orderBy("id")),
     "leiden_2level" -> ((s, d) =>
-      Leiden.twoLevelFrom(w1E(s, d), louvComm2(s, d), leidenSubM(s, d), 2)
+      Leiden.twoLevel(w1E(s, d), louvComm2(s, d), leidenSubM(s, d), 2)
         .orderBy("id")),
 
     // §2.4 label propagation (directed, fixed rounds)
@@ -408,7 +407,8 @@ object SparkEntry {
     "lpa_mode2" -> ((s, d) =>
       LabelPropagation.runMode(adjDir(s, d), 2).orderBy("id")),
 
-    // §2.5 triangle counting (degree-ordered orientation, two joins)
+    // §2.5 triangle counting (degree-ordered orientation, merge-
+    // intersected out-lists)
     "triangles" -> ((s, d) => {
       import s.implicits._
       Seq(triCount(s, d)).toDF("triangles")
@@ -422,11 +422,11 @@ object SparkEntry {
     }),
     "kclique_5" -> ((s, d) => {
       import s.implicits._
-      Seq(Mining.kcliqueCountOriented(orientedE(s, d), 5,
-        Some(olistE(s, d)))).toDF("cliques")
+      Seq(Mining.kcliqueCount(orientedE(s, d), 5, olistE(s, d)))
+        .toDF("cliques")
     }),
     "motif_3" -> ((s, d) =>
-      Mining.motif3From(symDeg(s, d), triCount(s, d))),
+      Mining.motif3(symDeg(s, d), triCount(s, d))),
     "motif_4" -> ((s, d) => {
       // in suite order kclique_4/motif_3 have already filled the k4/tri
       // memos, so motif_4's real cost is the two INDEPENDENT sgl memo
@@ -435,7 +435,7 @@ object SparkEntry {
       // cold full-width jobs measured 94s vs 47s sequential.
       val (t, k4) = (triCount(s, d), k4Count(s, d))
       val (c4, dia) = Par.both(c4Count(s, d), diaCount(s, d))
-      Mining.motif4From(symE(s, d), symDeg(s, d), t, k4, c4, dia,
+      Mining.motif4(symE(s, d), symDeg(s, d), t, k4, c4, dia,
         triPerV(s, d))
     }),
     // fsm.cpp at arbitrary pattern size (pangolin edge_miner): the BFS
@@ -475,18 +475,18 @@ object SparkEntry {
     // and wedge patterns over id%4 vertex labels — domains by O(E)
     // aggregates, no embedding enumeration
     "fsm_edge_s50" -> ((s, d) =>
-      Mining.fsmEdgeFrom(symE(s, d), 50L).orderBy("l1", "l2")),
+      Mining.fsmEdge(symE(s, d), 50L).orderBy("l1", "l2")),
     "fsm_wedge_s50" -> ((s, d) =>
-      Mining.fsmWedgeFrom(symE(s, d), 50L)
+      Mining.fsmWedge(symE(s, d), 50L)
         .orderBy("lc", "l1", "l2")),
     // FSM 3-edge tier (fsm.cpp -k=3): triangle and path patterns over
     // (id/8)%4 labels (id%4 is monochromatic along every fixture edge —
     // see Mining.lab3) — exact MNI, still zero embedding enumeration
     "fsm3_tri_s50" -> ((s, d) =>
-      Mining.fsm3TriangleFrom(triListE(s, d), 50L)
+      Mining.fsm3Triangle(triListE(s, d), 50L)
         .orderBy("l1", "l2", "l3")),
     "fsm3_path_s50" -> ((s, d) =>
-      Mining.fsm3PathFrom(symE(s, d), triListE(s, d), 50L)
+      Mining.fsm3Path(symE(s, d), triListE(s, d), 50L)
         .orderBy("l1", "l2", "l3", "l4")),
     // §2.6 matrix completion (matrixCompletion.cpp): alternating
     // full-batch fixed-point gradient rounds over the bipartite

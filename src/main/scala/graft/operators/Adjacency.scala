@@ -73,34 +73,20 @@ object Adjacency {
    * Build from a clean edge table (no self-loops / dup edges).
    * `numPartitions` sizes the stable hash partitioning used for every
    * iterative join; at cluster scale this is O(total cores).
+   *
+   * An edge table with a `w` column builds WEIGHTED blocks: they
+   * additionally carry a `ws` array ALIGNED with `dsts` — the Spark form
+   * of the reference's `edgeData` parallel array (LC_CSR_Graph.h:169-175;
+   * typed edge payloads written by graph-convert,
+   * graph-convert.cpp:118-131). Weighted kernels (SSSP) explode
+   * `arrays_zip(dsts, ws)`. Any other column is ignored.
    */
   def build(
       edges: DataFrame,
       blockSize: Int = 1024,
       numPartitions: Int = 32,
-      explicitVertices: Option[DataFrame] = None): Adjacency =
-    buildInternal(edges, weighted = false, blockSize, numPartitions,
-      explicitVertices)
-
-  /** Weighted build over (src, dst, w): blocks additionally carry a `ws`
-    * array ALIGNED with `dsts` — the Spark form of the reference's
-    * `edgeData` parallel array (LC_CSR_Graph.h:169-175; typed edge
-    * payloads written by graph-convert, graph-convert.cpp:118-131).
-    * Weighted kernels (SSSP) explode `arrays_zip(dsts, ws)`. */
-  def buildWeighted(
-      edges: DataFrame,
-      blockSize: Int = 1024,
-      numPartitions: Int = 32,
-      explicitVertices: Option[DataFrame] = None): Adjacency =
-    buildInternal(edges, weighted = true, blockSize, numPartitions,
-      explicitVertices)
-
-  private def buildInternal(
-      edges: DataFrame,
-      weighted: Boolean,
-      blockSize: Int,
-      numPartitions: Int,
-      explicitVertices: Option[DataFrame]): Adjacency = {
+      explicitVertices: Option[DataFrame] = None): Adjacency = {
+    val weighted = edges.columns.contains("w")
 
     // Two-phase CSR build like the reference's degree-count → scatter
     // (graph-convert.cpp:3027-3050): degree pass, then tile assignment

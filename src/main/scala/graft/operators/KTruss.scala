@@ -21,11 +21,11 @@ import org.apache.spark.sql.functions._
  * expression keys, re-shuffling both sides every round).
  *
  * Support is maintained INCREMENTALLY (the standard truss-peeling
- * shape, and the part that matters at 100 TB): the wedge-join triangle
- * enumeration — whose cost is O(Σ outdeg²), dwarfing everything else —
- * runs ONCE, straight into the per-edge support aggregate; each peel
- * round then finds the triangles touching a just-dropped edge by
- * wedge-joining the SMALL dead set against the previous survivor edges
+ * shape, and the part that matters at 100 TB): the triangle listing
+ * ([[Triangles.listingFrom]], shared with the rest of the mining tier)
+ * feeds the per-edge support aggregate ONCE; each peel round then finds
+ * the triangles touching a just-dropped edge by wedge-joining the SMALL
+ * dead set against the previous survivor edges
  * (three position joins, O(|dead|·deg) work) and subtracts their
  * contributions from the persisted support table. Correctness:
  * survivors(i) ⊂ survivors(i−1), so any triangle alive at round i−1 and
@@ -48,18 +48,6 @@ object KTruss {
       greatest(col("src"), col("dst")).as("hi"),
       (col("src") < col("dst")).as("fwd"))
       .repartition(col("lo"), col("hi"))
-
-  /** Triangles (a, b, c) of the canonical set, in degree-oriented order:
-    * a→b, b→c, a→c all present. The wedge join — the one expensive pass. */
-  private def enumerate(o: DataFrame): DataFrame = {
-    val d = o.select(
-      when(col("fwd"), col("lo")).otherwise(col("hi")).as("src"),
-      when(col("fwd"), col("hi")).otherwise(col("lo")).as("dst"))
-    val e1 = d.select(col("src").as("a"), col("dst").as("b"))
-    val e2 = d.select(col("src").as("b"), col("dst").as("c"))
-    val e3 = d.select(col("src").as("a"), col("dst").as("c"))
-    e1.join(e2, "b").join(e3, Seq("a", "c")).select("a", "b", "c")
-  }
 
   private def edgeKey(x: Column, y: Column) =
     struct(least(x, y).as("lo"), greatest(x, y).as("hi"))
@@ -138,30 +126,20 @@ object KTruss {
     State(o2, sup2, dropped)
   }
 
-  private def init(edges: DataFrame,
-      pre: Option[(DataFrame, DataFrame)]): State = {
-    val o = canonical(pre.map(_._1)
-        .getOrElse(Triangles.orientByDegree(edges)))
-      .transform(Materialize(_))
-    // enumeration feeds the support aggregate directly — the triangle
-    // set itself is never materialized or carried; a caller that already
-    // holds the listing (shared across the mining suite) passes it in
-    // and skips the wedge join entirely
-    val tris = pre.map(_._2).getOrElse(enumerate(o))
-    State(o, Materialize(initialSupport(tris)), -1L)
-  }
-
-  /** At most `maxRounds` support-peel rounds at truss number k:
-    * (surviving undirected edges as (src < dst), rounds run). A round
-    * that drops no edge is a fixpoint: every further round is the
-    * identity, so the loop stops there and the result equals the full
-    * `maxRounds` unroll (the SQL oracle's form). The last allowed round
-    * skips the support maintenance nothing would read. `pre` optionally
-    * supplies the degree orientation and its triangle listing when the
-    * caller has them materialized already. */
-  def run(edges: DataFrame, k: Int, maxRounds: Int = 1000,
-      pre: Option[(DataFrame, DataFrame)] = None): (DataFrame, Int) = {
-    var s = init(edges, pre)
+  /** At most `maxRounds` support-peel rounds at truss number k over the
+    * degree orientation `oriented` ([[Triangles.orientFromSym]]) and its
+    * triangle listing `tris` ([[Triangles.listingFrom]]): (surviving
+    * undirected edges as (src < dst), rounds run). The listing feeds the
+    * support aggregate directly; this kernel never carries the triangle
+    * set itself. A round that drops no edge is a fixpoint: every further
+    * round is the identity, so the loop stops there and the result
+    * equals the full `maxRounds` unroll (the SQL oracle's form). The
+    * last allowed round skips the support maintenance nothing would
+    * read. */
+  def run(oriented: DataFrame, tris: DataFrame, k: Int,
+      maxRounds: Int = 1000): (DataFrame, Int) = {
+    var s = State(Materialize(canonical(oriented)),
+      Materialize(initialSupport(tris)), -1L)
     var rounds = 0
     while (s.dropped != 0L && rounds < maxRounds) {
       rounds += 1

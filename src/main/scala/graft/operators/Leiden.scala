@@ -53,19 +53,13 @@ object Leiden {
     Louvain.moveRounds(edges, intra, rounds, null)
   }
 
-  /** Two Leiden levels: move r1 + refine rf, aggregate on the REFINED
+  /** Two Leiden levels: move + refine, aggregate on the REFINED
     * partition, seed the coarse level with the parent communities, move
-    * r2 there, project back: (id, community). */
-  def twoLevel(edges: DataFrame, r1: Int, rf: Int, r2: Int): DataFrame = {
-    val w1 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-    val comm = Materialize(Louvain.localMoveRoundsWeighted(w1, r1))
-    val sub = Materialize(refineWeighted(w1, comm, rf))
-    twoLevelFrom(w1, comm, sub, r2)
-  }
-
-  /** The coarse half of [[twoLevel]] over precomputed level-1 move +
-    * refinement assignments. */
-  def twoLevelFrom(w1: DataFrame, comm: DataFrame, sub: DataFrame,
+    * r2 there, project back: (id, community). Level 1 is given over the
+    * weighted edge table `w1`: `comm` is the materialized
+    * [[Louvain.localMoveRoundsWeighted]] assignment and `sub` its
+    * materialized [[refineWeighted]] refinement. */
+  def twoLevel(w1: DataFrame, comm: DataFrame, sub: DataFrame,
       r2: Int): DataFrame = {
     val coarse = Louvain.coarsen(w1, sub)
     // each sub-community lies inside exactly one parent community (the

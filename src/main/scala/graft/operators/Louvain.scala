@@ -126,17 +126,12 @@ object Louvain {
 
   /** Two Louvain levels — local move, aggregate, local move on the
     * community graph, project back: (id, community). The full multi-level
-    * loop is this pair iterated; two levels exercise every phase. */
-  def twoLevel(edges: DataFrame, rounds1: Int, rounds2: Int): DataFrame = {
-    val w1 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-    val l1 = Materialize(localMoveRoundsWeighted(w1, rounds1))
-    twoLevelFrom(w1, l1, rounds2)
-  }
-
-  /** Level-2 half of [[twoLevel]] over a precomputed level-1 assignment
-    * (a suite that already ran `rounds1` local-move rounds shares that
-    * state instead of recomputing it). */
-  def twoLevelFrom(w1: DataFrame, l1: DataFrame, rounds2: Int): DataFrame = {
+    * loop is this pair iterated; two levels exercise every phase. Level 1
+    * is given: `l1` is the materialized [[localMoveRoundsWeighted]]
+    * assignment over the weighted edge table `w1` (a suite shares that
+    * state instead of recomputing it); this runs aggregation and
+    * `rounds2` level-2 rounds. */
+  def twoLevel(w1: DataFrame, l1: DataFrame, rounds2: Int): DataFrame = {
     val coarse = coarsen(w1, l1)
     val l2 = localMoveRoundsWeighted(coarse, rounds2)
     l1.join(l2.select(col("id").as("community"),

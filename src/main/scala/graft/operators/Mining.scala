@@ -28,7 +28,9 @@ import org.apache.spark.sql.functions._
 object Mining {
 
   /** All k-cliques of the (cleaned, symmetrized) graph, one row per
-    * clique as (v1 … vk) in degree-orientation order. k ≥ 2. */
+    * clique as (v1 … vk) in degree-orientation order. k ≥ 2. No query
+    * lists cliques; it is the independent reference the spec compares
+    * [[kcliqueCount]] against. */
   def kcliques(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"clique order must be >= 2, got $k")
     val o = Materialize(Triangles.orientByDegree(edges))
@@ -50,7 +52,31 @@ object Mining {
     cur.select((1 to k).map(i => col(s"v$i")): _*)
   }
 
-  /** k-clique count (the kcl.cpp headline number) — computed kClist-
+  /** Sorted out-neighbor lists of a degree-oriented edge set — the
+    * candidate-set cascade's working frame, shareable across clique
+    * orders (k=4 and k=5 consume the same lists). */
+  def outLists(o: DataFrame): DataFrame =
+    o.groupBy(col("src"))
+      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+
+  /** `olist`, broadcast while it fits. Out-lists are V-sized (bounded by
+    * the orientation); broadcasting them keeps every join against them
+    * in one codegen stage with no exchange of the (huge) stream they
+    * extend. The gate is on ESTIMATED BYTES (8 B/element + ~24 B row
+    * overhead), not row count: a few million rows of long-array
+    * out-lists can be multi-GB on a dense graph — past the broadcast
+    * limit and an executor-OOM risk exactly where a row-count gate
+    * would still pass. One job (the size estimate). */
+  private[operators] def gatedOutLists(olist: DataFrame): DataFrame = {
+    val st = olist.agg(count(lit(1)),
+      coalesce(sum(size(col("nbrs"))), lit(0L))).first()
+    val estBytes = st.getLong(1) * 8L + st.getLong(0) * 24L
+    if (estBytes <= (256L << 20)) broadcast(olist) else olist
+  }
+
+  /** k-clique count (the kcl.cpp headline number) over a degree
+    * orientation `o` and its [[outLists]] `olist` — one orientation + one
+    * list build serve every clique order in a suite. Computed kClist-
     * style rather than by counting [[kcliques]] rows: the flat join
     * cascade materializes every (i-clique × proposal) row through a
     * shuffle, which on a dense graph is billions of rows by k = 5
@@ -62,36 +88,10 @@ object Mining {
     * toward the clique, never re-expanding to full out-lists. Out-lists
     * are bounded by the degree orientation (the hub-skew guard), so the
     * arrays stay small at web scale. */
-  def kcliqueCount(edges: DataFrame, k: Int): Long =
-    kcliqueCountOriented(
-      Materialize(Triangles.orientByDegree(edges)), k)
-
-  /** Sorted out-neighbor lists of a degree-oriented edge set — the
-    * candidate-set cascade's working frame, shareable across clique
-    * orders (k=4 and k=5 consume the same lists). */
-  def outLists(o: DataFrame): DataFrame =
-    o.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-
-  /** [[kcliqueCount]] over a precomputed orientation (and optionally
-    * precomputed out-lists) — one orientation + one list build serve
-    * every clique order in a suite. */
-  def kcliqueCountOriented(o: DataFrame, k: Int,
-      olistOpt: Option[DataFrame] = None): Long = {
+  def kcliqueCount(o: DataFrame, k: Int, olist: DataFrame): Long = {
     require(k >= 2, s"clique order must be >= 2, got $k")
     if (k == 2) return o.count()
-    val olist = olistOpt.getOrElse(Materialize(outLists(o)))
-    // out-lists are V-sized (bounded by the orientation); broadcast
-    // them while that fits so every extension stays in one codegen
-    // stage with no exchange of the (huge) prefix stream. The gate is
-    // on ESTIMATED BYTES (8 B/element + ~24 B row overhead), not row
-    // count: a few million rows of long-array out-lists can be multi-GB
-    // on a dense graph — past the broadcast limit and an executor-OOM
-    // risk exactly where a row-count gate would still pass.
-    val st = olist.agg(count(lit(1)),
-      coalesce(sum(size(col("nbrs"))), lit(0L))).first()
-    val estBytes = st.getLong(1) * 8L + st.getLong(0) * 24L
-    val ol = if (estBytes <= (256L << 20)) broadcast(olist) else olist
+    val ol = gatedOutLists(olist)
     // C2 = N⁺(u) ∩ N⁺(v) per oriented edge; a vertex with no out-list
     // contributes an empty intersection, so inner joins dropping it are
     // exact for counting. Intersections are the codegen'd sorted merge
@@ -132,13 +132,8 @@ object Mining {
     *
     * Single-edge patterns (l1 ≤ l2): dom(l1-side) = #{u : lab u = l1,
     * ∃ nbr with lab l2}; support = min of the two sides (= both for
-    * l1 = l2). */
-  def fsmEdge(edges: DataFrame, minSupport: Long,
-      numLabels: Int = 4): DataFrame =
-    fsmEdgeFrom(GraphOps.symmetrize(edges), minSupport, numLabels)
-
-  /** [[fsmEdge]] over a precomputed symmetric edge set. */
-  def fsmEdgeFrom(sym: DataFrame, minSupport: Long,
+    * l1 = l2). Runs over the symmetric edge set `sym`. */
+  def fsmEdge(sym: DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame = {
     val el = sym
       .select((col("src") % numLabels).as("ls"),
@@ -158,14 +153,8 @@ object Mining {
     * l1 side = l1-labeled vertices adjacent to a center of lab lc that
     * can still supply the OTHER endpoint (so for l1 = l2 the center
     * needs a second same-label neighbor). Support = min of the three
-    * domains. */
-  def fsmWedge(edges: DataFrame, minSupport: Long,
-      numLabels: Int = 4): DataFrame =
-    fsmWedgeFrom(Materialize(GraphOps.symmetrize(edges)),
-      minSupport, numLabels)
-
-  /** [[fsmWedge]] over a precomputed symmetric edge set. */
-  def fsmWedgeFrom(sym: DataFrame, minSupport: Long,
+    * domains. Runs over the symmetric edge set `sym`. */
+  def fsmWedge(sym: DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame = {
     // nc(c, l) = # distinct neighbors of c carrying label l
     val nc = sym.groupBy(col("src").as("c"),
@@ -209,14 +198,9 @@ object Mining {
     * closes three wedges). One row (wedges, triangles, open_wedges).
     * `triangles` is taken as a parameter so a suite that has already
     * counted them (the `triangles` query) shares the memo instead of
-    * re-running the 2-join enumeration. */
-  def motif3(edges: DataFrame, triangles: Long): DataFrame = {
-    val sym = GraphOps.symmetrize(edges)
-    motif3From(Triangles.symDegrees(sym), triangles)
-  }
-
-  /** [[motif3]] from a precomputed undirected degree table (id, d). */
-  def motif3From(deg: DataFrame, triangles: Long): DataFrame = {
+    * re-running the listing; the wedges come from the undirected degree
+    * table `deg` (id, d). */
+  def motif3(deg: DataFrame, triangles: Long): DataFrame = {
     val spark = deg.sparkSession
     import spark.implicits._
     val wedgeRow = deg.select(col("id"), col("d"))
@@ -228,10 +212,6 @@ object Mining {
       .toDF("wedges", "triangles", "open_wedges")
   }
 
-  /** The degree-oriented triangle listing — see [[Triangles.listing]]. */
-  private def triangleListing(o: DataFrame): DataFrame =
-    Triangles.listing(o)
-
   /** Edge-induced 4-cycle count — the reference's subgraph-listing app
     * for the rectangle pattern (lonestar/mining/cpu/subgraph-listing/
     * sgl_cycle.cpp:1-55, pangolin BFS extension; "listing edge-induced
@@ -242,14 +222,8 @@ object Mining {
     * summing C(n, 2) counts each 4-cycle exactly once. Enumerated
     * wedges are bounded by Σ_v outdeg⁺(v)·deg(v) — the Chiba–Nishizeki
     * O(α·E) bound — because hub CENTERS, which dominate Σ_v C(d_v, 2),
-    * rank above their neighbors and are excluded. */
-  def cycle4Count(edges: DataFrame): Long = {
-    val sym = Materialize(GraphOps.symmetrize(GraphOps.clean(edges)))
-    val deg = Materialize(Triangles.symDegrees(sym))
-    cycle4CountFrom(sym, deg)
-  }
-
-  /** [[cycle4Count]] over precomputed symmetric edges + degree table.
+    * rank above their neighbors and are excluded. Runs over the
+    * symmetric edge set `sym` and its degree table `deg`.
     *
     * The wedge enumeration is SPLIT by the center's rank (the
     * ESCAPE-style decomposition, Pinar et al. 2017) instead of
@@ -263,7 +237,7 @@ object Mining {
     * all (Σ_v indeg⁻·outdeg⁺ rows). Versus the single-stream form this
     * emits ~half the join output and drops the degree lookup + rank
     * filter from the bigger class. */
-  def cycle4CountFrom(sym: DataFrame, deg: DataFrame): Long = {
+  def cycle4Count(sym: DataFrame, deg: DataFrame): Long = {
     val o = sym
       .join(deg.select(col("id").as("src"), col("d").as("ds")), "src")
       .join(deg.select(col("id").as("dst"), col("d").as("du")), "dst")
@@ -291,14 +265,9 @@ object Mining {
     * distinct triangles sharing an edge: enumerate the triangle listing
     * once (O(T)), credit each triangle to its three edges, and sum
     * C(t_e, 2) over per-edge triangle counts — the shared edge (the
-    * diamond's chord) identifies each diamond exactly once. */
-  def diamondCount(edges: DataFrame): Long = {
-    val o = Materialize(Triangles.orientByDegree(edges))
-    diamondCountFrom(triangleListing(o))
-  }
-
-  /** [[diamondCount]] over a precomputed triangle listing. */
-  def diamondCountFrom(tris: DataFrame): Long = {
+    * diamond's chord) identifies each diamond exactly once. `tris` is
+    * the triangle listing ([[Triangles.listingFrom]]). */
+  def diamondCount(tris: DataFrame): Long = {
     // each oriented pair appears once in o, so (src,dst) of the three
     // member edges is a canonical per-edge key
     val credits = tris.select(explode(array(
@@ -328,18 +297,10 @@ object Mining {
     *
     * with paw_sub = Σ_v t_v·(d_v − 2), star_sub = Σ_v C(d_v, 3) and
     * p4_sub = Σ_{edges} (d_u − 1)(d_v − 1) − 3·T. The identities are
-    * cross-checked against a brute-force induced census in the spec. */
-  def motif4(edges: DataFrame, triangles: Long, cliques4: Long,
-      cycles4Sub: Long, diamondsSub: Long,
-      triPerVertex: DataFrame): DataFrame = {
-    val sym = Materialize(GraphOps.symmetrize(GraphOps.clean(edges)))
-    val deg = Materialize(Triangles.symDegrees(sym))
-    motif4From(sym, deg, triangles, cliques4, cycles4Sub, diamondsSub,
-      triPerVertex)
-  }
-
-  /** [[motif4]] over precomputed symmetric edges + degree table. */
-  def motif4From(sym: DataFrame, deg: DataFrame, triangles: Long,
+    * cross-checked against a brute-force induced census in the spec.
+    * The O(E) aggregates run over the symmetric edge set `sym` and its
+    * degree table `deg`. */
+  def motif4(sym: DataFrame, deg: DataFrame, triangles: Long,
       cliques4: Long, cycles4Sub: Long, diamondsSub: Long,
       triPerVertex: DataFrame): DataFrame = {
     val spark = sym.sparkSession
@@ -380,15 +341,9 @@ object Mining {
     * l-labeled slot is the set of l-labeled vertices lying in a
     * triangle whose corner labels form exactly that multiset — one O(T)
     * pass over the triangle listing, no embedding worklists. Support =
-    * min over slot domains (same-label slots share a domain). */
-  def fsm3Triangle(edges: DataFrame, minSupport: Long,
-      numLabels: Int = 4): DataFrame = {
-    val o = Materialize(Triangles.orientByDegree(edges))
-    fsm3TriangleFrom(triangleListing(o), minSupport, numLabels)
-  }
-
-  /** [[fsm3Triangle]] over a precomputed triangle listing. */
-  def fsm3TriangleFrom(triList: DataFrame, minSupport: Long,
+    * min over slot domains (same-label slots share a domain). `triList`
+    * is the triangle listing ([[Triangles.listingFrom]]). */
+  def fsm3Triangle(triList: DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame = {
     def lb(c: org.apache.spark.sql.Column) = lab3(c, numLabels)
     val tris = triList
@@ -419,26 +374,6 @@ object Mining {
       .filter(col("support") >= minSupport)
   }
 
-  /** FSM 3-edge tier, path patterns (l1–l2–l3–l4, canonical under
-    * reversal): EXACT MNI domains with O(E·labels + T) aggregates and
-    * zero embedding enumeration — the fixture has 2.3·10^10 path walks
-    * at sf0.1, so enumeration is not an option (and is exactly what the
-    * pangolin embedding engine would do). A vertex is in a slot's
-    * domain iff its exact embedding count there is positive; the count
-    * is the raw walk count minus the walks that violate vertex
-    * distinctness, which partition cleanly (for slot 1, walks u-b-c-d:
-    * {c = u} ∪ {c ≠ u, d = b} ∪ {c ≠ u, d = u}) into closed forms over
-    * three reusable frames: nc(v,l) = labeled neighbor counts,
-    * nn(v,l1,l2) = Σ_{y~v, L(y)=l1} nc(y,l2), and tno(v,l1,l2) =
-    * ordered adjacent-neighbor-pair (labeled triangle) counts at v.
-    * Cross-checked against full enumeration in the spec. */
-  def fsm3Path(edges: DataFrame, minSupport: Long,
-      numLabels: Int = 4): DataFrame = {
-    val sym = Materialize(GraphOps.symmetrize(GraphOps.clean(edges)))
-    val o = Materialize(Triangles.orientByDegree(edges))
-    fsm3PathFrom(sym, triangleListing(o), minSupport, numLabels)
-  }
-
   /** tno(v, x, y): ordered labeled adjacent-neighbor-pair counts at v —
     * one pass over the triangle listing (eagerly checkpointed). */
   private def tnoFrame(triList: DataFrame, numLabels: Int): DataFrame = {
@@ -456,13 +391,27 @@ object Mining {
       .transform(Materialize(_))
   }
 
-  /** [[fsm3Path]] over precomputed symmetric edges + triangle listing.
-    * `triList` is BY-NAME: the (nc → nn) chain depends only on `sym`,
-    * so its eager checkpoints overlap the (possibly still-building)
-    * triangle listing and the tno pass on a second thread — the two
-    * pipelines are independent until the final closed-form joins
-    * (guide §2.6, overlap independent jobs). */
-  def fsm3PathFrom(sym: DataFrame, triList: => DataFrame, minSupport: Long,
+  /** FSM 3-edge tier, path patterns (l1–l2–l3–l4, canonical under
+    * reversal): EXACT MNI domains with O(E·labels + T) aggregates and
+    * zero embedding enumeration — the fixture has 2.3·10^10 path walks
+    * at sf0.1, so enumeration is not an option (and is exactly what the
+    * pangolin embedding engine would do). A vertex is in a slot's
+    * domain iff its exact embedding count there is positive; the count
+    * is the raw walk count minus the walks that violate vertex
+    * distinctness, which partition cleanly (for slot 1, walks u-b-c-d:
+    * {c = u} ∪ {c ≠ u, d = b} ∪ {c ≠ u, d = u}) into closed forms over
+    * three reusable frames: nc(v,l) = labeled neighbor counts,
+    * nn(v,l1,l2) = Σ_{y~v, L(y)=l1} nc(y,l2), and tno(v,l1,l2) =
+    * ordered adjacent-neighbor-pair (labeled triangle) counts at v.
+    * Cross-checked against full enumeration in the spec.
+    *
+    * Runs over the symmetric edge set `sym` and the triangle listing
+    * `triList`. `triList` is BY-NAME: the (nc → nn) chain depends only
+    * on `sym`, so its eager checkpoints overlap the (possibly still-
+    * building) triangle listing and the tno pass on a second thread —
+    * the two pipelines are independent until the final closed-form
+    * joins (guide §2.6, overlap independent jobs). */
+  def fsm3Path(sym: DataFrame, triList: => DataFrame, minSupport: Long,
       numLabels: Int = 4): DataFrame = {
     def lb(c: org.apache.spark.sql.Column) = lab3(c, numLabels)
     val ((nc, nn), tno) = Par.both({

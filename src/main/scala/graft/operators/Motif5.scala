@@ -345,9 +345,9 @@ object Motif5 {
     // proposal join materializes the (k−1)-clique × out-degree stream
     // (measured ~27 s for hom(K5) at the sampled sf0.1 fixture vs ~3 s
     // through Mining.kcliqueCount's shrinking sorted-array candidates).
-    // `cliqueCount` lets the census share ONE orientation + out-list
-    // build across every complete quotient (K2..K5) instead of
-    // re-orienting the arc frame per call.
+    // `cliqueCount` is that kernel over the census's ONE orientation +
+    // out-list build, shared by every complete quotient (K2..K5) instead
+    // of re-orienting the arc frame per call.
     if (pedges.size == k * (k - 1) / 2)
       return (1L to k.toLong).product * cliqueCount(k)
     var factors: List[Factor] = pedges.toList.map { case (a, b) =>
@@ -455,7 +455,7 @@ object Motif5 {
       .transform(Materialize(_))
     val arcOlists = Materialize(Mining.outLists(orientedArcs))
     val cliqueFn: Int => Long =
-      k => Mining.kcliqueCountOriented(orientedArcs, k, Some(arcOlists))
+      k => Mining.kcliqueCount(orientedArcs, k, arcOlists)
     // densest first (they run longest), on a BOUNDED pool: the ~30 hom
     // jobs are individually tiny-staged, and submitting them all at
     // once just thrashes the scheduler (measured 3-7x per-hom wall

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
  * Two weight surfaces, matching the reference's two graph shapes:
  *  - REAL edge weights (the reference default: `.gr` edge payloads,
  *    graph-convert.cpp:118-131, consumed at SSSP.cpp:58-84) — adjacency
- *    built with [[Adjacency.buildWeighted]], whose blocks carry a `ws`
- *    array aligned with `dsts`;
+ *    built by [[Adjacency.build]] from an edge table with a `w` column,
+ *    whose blocks carry a `ws` array aligned with `dsts`;
  *  - synthetic weights for weightless edge tables ([[syntheticWeight]]:
  *    1 + (src + dst) mod 9, replicable in plain integer SQL).
  *
@@ -38,8 +38,8 @@ object Sssp {
         (col("dist") + syntheticWeight(col("src"), col("nbr"))).as("dist"))
       .groupBy("id").agg(min(col("dist")).as("dist"))
 
-  /** Relaxation over REAL edge weights: blocks from
-    * [[Adjacency.buildWeighted]] carry (dsts, ws) parallel arrays; the
+  /** Relaxation over REAL edge weights: weighted blocks from
+    * [[Adjacency.build]] carry (dsts, ws) parallel arrays; the
     * zip-explode keeps each neighbor paired with its weight. */
   private def scatterWeighted(adj: Adjacency, frontier: DataFrame): DataFrame =
     adj.blocks
@@ -51,7 +51,7 @@ object Sssp {
   /** Exactly k relaxation rounds: every vertex reachable within k hops,
     * with its best ≤k-hop weighted distance. The weights follow the
     * adjacency's schema, like [[zeroDist]]: blocks with a `ws` array
-    * ([[Adjacency.buildWeighted]]) relax over their real weights, blocks
+    * ([[Adjacency.build]]) relax over their real weights, blocks
     * without one over [[syntheticWeight]]. */
   def fixedRounds(adj: Adjacency, source: Long, k: Int): DataFrame = {
     val spark = adj.blocks.sparkSession

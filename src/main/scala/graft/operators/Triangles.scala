@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
  * on the smallest adjacency lists; here the same effect comes from
  * orienting every undirected edge from the lower-(degree, id) endpoint to
  * the higher one — hubs then have small OUT-lists, which bounds the size of
- * the self-join's per-key groups (the skew concern at scale).
+ * every list an intersection merges (the skew concern at scale).
  *
- * Count = |{(a,b,c) : a→b, b→c, a→c in the oriented edge set}| via two
- * shuffle hash joins; exact.
+ * The listing is [[listingFrom]]: per oriented edge (a, b), the sorted
+ * merge of the out-lists of a and b — the reference's merge-intersect.
+ * Count = |{(a,b,c) : a→b, b→c, a→c in the oriented edge set}|; exact.
  */
 object Triangles {
 
@@ -46,12 +47,10 @@ object Triangles {
     orientFromSym(sym, symDegrees(sym))
   }
 
-  /** The degree-oriented triangle listing (a, b, c) with a→b, b→c, a→c
-    * in the orientation — one row per undirected triangle. This is the
-    * ONE expensive enumeration every triangle-derived operator (count,
-    * per-vertex credits, diamonds, labeled FSM tiers, truss support)
-    * consumes; callers that run several of them share one materialized
-    * listing instead of re-joining per query. */
+  /** The wedge self-join form of [[listingFrom]]: (a, b, c) with a→b,
+    * b→c, a→c in the orientation, one row per undirected triangle, by two
+    * shuffle joins. No query runs it; it is the independent reference
+    * the spec compares [[listingFrom]] against. */
   def listing(oriented: DataFrame): DataFrame = {
     val e1 = oriented.select(col("src").as("a"), col("dst").as("b"))
     val e2 = oriented.select(col("src").as("b2"), col("dst").as("c"))
@@ -61,20 +60,25 @@ object Triangles {
       .select(col("a"), col("b"), col("c"))
   }
 
-  /** [[listing]] over precomputed sorted out-lists: for each oriented
-    * edge (a, b), every c ∈ N⁺(a) ∩ N⁺(b) closes a→b, b→c, a→c — the
-    * same rows the wedge self-join produces, but nothing Σ outdeg⁺²-
-    * sized ever crosses an exchange: the out-lists ride a byte-gated
-    * broadcast (the kclique kernel's gate — estimated bytes, not rows)
-    * and the intersection is the zero-allocation codegen'd sorted merge
-    * (SortedArrays), so the whole enumeration is one broadcast-joined
-    * codegen stage over the O(E) oriented edge set. An endpoint with no
-    * out-list closes nothing, so the inner join dropping it is exact. */
+  /** The degree-oriented triangle listing (a, b, c) with a→b, b→c, a→c
+    * in the orientation — one row per undirected triangle. This is the
+    * ONE expensive enumeration every triangle-derived operator (count,
+    * per-vertex credits, diamonds, labeled FSM tiers, truss support)
+    * consumes; callers that run several of them share one materialized
+    * listing instead of re-listing per query.
+    *
+    * Over the sorted out-lists `olist` ([[Mining.outLists]] of
+    * `oriented`): for each oriented edge (a, b), every c ∈ N⁺(a) ∩ N⁺(b)
+    * closes a→b, b→c, a→c — the same rows the wedge self-join
+    * [[listing]] produces, but nothing Σ outdeg⁺²-sized ever crosses an
+    * exchange: the out-lists ride the byte-gated broadcast
+    * ([[Mining.gatedOutLists]]) and the intersection is the zero-
+    * allocation codegen'd sorted merge (SortedArrays), so the whole
+    * enumeration is one broadcast-joined codegen stage over the O(E)
+    * oriented edge set. An endpoint with no out-list closes nothing, so
+    * the inner join dropping it is exact. */
   def listingFrom(oriented: DataFrame, olist: DataFrame): DataFrame = {
-    val st = olist.agg(functions.count(lit(1)),
-      coalesce(functions.sum(size(col("nbrs"))), lit(0L))).first()
-    val estBytes = st.getLong(1) * 8L + st.getLong(0) * 24L
-    val ol = if (estBytes <= (256L << 20)) broadcast(olist) else olist
+    val ol = Mining.gatedOutLists(olist)
     oriented
       .join(ol.select(col("src"), col("nbrs").as("na")), "src")
       .join(ol.select(col("src").as("dst"), col("nbrs").as("nb")), "dst")
@@ -83,17 +87,10 @@ object Triangles {
           col("na"), col("nb"))).as("c"))
   }
 
-  /** Exact triangle count over the (already oriented, duplicate-free) edge
-    * set. Any acyclic orientation yields the same count. */
-  def countOriented(oriented: DataFrame): Long = listing(oriented).count()
-
-  /** End-to-end: clean → symmetrize → degree-orient → two-join count. */
-  def count(edges: DataFrame): Long = countOriented(orientByDegree(edges))
-
   /** Per-vertex triangle participation counts over a precomputed triangle
     * listing (each triangle credited to all three corners), over all
     * `vertices` (0 for none). */
-  def perVertexFrom(tris: DataFrame, vertices: DataFrame): DataFrame = {
+  def perVertex(tris: DataFrame, vertices: DataFrame): DataFrame = {
     val credits = tris.select(col("a").as("id"))
       .union(tris.select(col("b").as("id")))
       .union(tris.select(col("c").as("id")))

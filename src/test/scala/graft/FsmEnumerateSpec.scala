@@ -122,7 +122,8 @@ class FsmEnumerateSpec extends AnyFunSuite {
     // triangles: canonical labels under S3 = the sorted label multiset
     val triShape = lvl3.filter(p => p.shape.m == 3)
     val gotTri = triShape.map(_.labels.sorted).toSet
-    val wantTri = Mining.fsm3Triangle(df, s, numLabels)
+    val wantTri = Mining.fsm3Triangle(TestSpark.triFrames(df)._3, s,
+      numLabels)
       .collect().map(r => Vector(r.getLong(0).toInt, r.getLong(1).toInt,
         r.getLong(2).toInt)).toSet
     assert(gotTri == wantTri, s"triangles: $gotTri vs $wantTri")
@@ -145,7 +146,8 @@ class FsmEnumerateSpec extends AnyFunSuite {
       val seq = order.map(p.labels)
       if (seq.mkString <= seq.reverse.mkString) seq else seq.reverse
     }.toSet
-    val wantPath = Mining.fsm3Path(df, s, numLabels)
+    val wantPath = Mining.fsm3Path(TestSpark.symDeg(df)._1,
+      TestSpark.triFrames(df)._3, s, numLabels)
       .collect().map(r => Vector(r.getLong(0).toInt, r.getLong(1).toInt,
         r.getLong(2).toInt, r.getLong(3).toInt)).toSet
     assert(gotPath == wantPath, s"paths: $gotPath vs $wantPath")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.exec.Materialize
 import graft.operators._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -90,13 +91,12 @@ class GraphAlgoSpec extends AnyFunSuite {
     val coarse = Louvain.coarsen(w1, l1)
     assert(coarse.agg(sum("w")).first().getLong(0) == e.count())
     // two-level result separates the cliques like the flat run
-    val m = labelMap(Louvain.twoLevel(e, 2, 2)
-      .select(col("id"), col("community")))
+    val two = Louvain.twoLevel(w1, Materialize(l1), 2)
+    val m = labelMap(two.select(col("id"), col("community")))
     assert((0L to 4L).map(m).toSet.size == 1)
     assert((10L to 14L).map(m).toSet.size == 1)
     assert(m(0L) != m(10L))
-    assert(Louvain.modularityI4(e, Louvain.twoLevel(e, 2, 2)) >=
-      Louvain.modularityI4(e, l1))
+    assert(Louvain.modularityI4(e, two) >= Louvain.modularityI4(e, l1))
   }
 
   test("Louvain full cluster() converges and matches the clique structure") {
@@ -148,7 +148,10 @@ class GraphAlgoSpec extends AnyFunSuite {
       b <- (a + 1) until base + 5) yield (a, b)) ++
       Seq((4L, 10L), (14L, 20L))
     val e = GraphOps.symmetrize(df(cl))
-    val two = labelMap(Leiden.twoLevel(e, 2, 2, 2)
+    val w1 = unitW(e)
+    val comm = Materialize(Louvain.localMoveRoundsWeighted(w1, 2))
+    val sub = Materialize(Leiden.refineWeighted(w1, comm, 2))
+    val two = labelMap(Leiden.twoLevel(w1, comm, sub, 2)
       .select(col("id"), col("community")))
     Seq(0L, 10L, 20L).foreach { base =>
       assert((base to base + 4).map(two).toSet.size == 1,
@@ -197,14 +200,15 @@ class GraphAlgoSpec extends AnyFunSuite {
 
   test("FSM: aggregate-computed MNI wedge supports equal full embedding " +
       "enumeration") {
-    val got = Mining.fsmWedge(web.edges, 1L).collect()
+    val got = Mining.fsmWedge(
+      Materialize(GraphOps.symmetrize(web.edges)), 1L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
       .toMap
     val brute = TestOracles.fsmWedgeBrute(edgeArray, 4)
     assert(got == brute)
     // edge patterns: support bounded by the label-class sizes and
     // symmetric patterns self-consistent
-    val eg = Mining.fsmEdge(web.edges, 1L).collect()
+    val eg = Mining.fsmEdge(GraphOps.symmetrize(web.edges), 1L).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(eg.nonEmpty && eg.keys.forall { case (a, b) => a <= b })
   }
@@ -322,30 +326,31 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("triangle count matches brute-force oracle on the web graph") {
-    assert(Triangles.count(web.edges) == TestOracles.triangles(edgeArray))
+    assert(triFrames(web.edges)._3.count() ==
+      TestOracles.triangles(edgeArray))
   }
 
   test("triangle count on canonical shapes") {
-    assert(Triangles.count(df(Seq((1L, 2L), (2L, 3L), (3L, 1L)))) == 1L)
+    def triCount(e: Seq[(Long, Long)]): Long = triFrames(df(e))._3.count()
+    assert(triCount(Seq((1L, 2L), (2L, 3L), (3L, 1L))) == 1L)
     val k4 = for (a <- 1L to 4L; b <- 1L to 4L if a < b) yield (a, b)
-    assert(Triangles.count(df(k4)) == 4L)
+    assert(triCount(k4) == 4L)
     val star = (2L to 9L).map(i => (1L, i))
-    assert(Triangles.count(df(star)) == 0L)
+    assert(triCount(star) == 0L)
     // a directed 3-cycle IS a triangle after symmetrization; a directed
     // 4-cycle is not
-    assert(Triangles.count(df(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)))) == 0L)
+    assert(triCount(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))) == 0L)
   }
 
   test("triangle count is invariant under relabeling") {
     val base = TestOracles.triangles(edgeArray)
     val relabeled = edgeArray.map { case (a, b) => (9999L - a, 9999L - b) }
     assert(TestOracles.triangles(relabeled) == base)
-    assert(Triangles.count(df(relabeled.toSeq)) == base)
+    assert(triFrames(df(relabeled.toSeq))._3.count() == base)
   }
 
   test("per-vertex triangle credit sums to 3x count") {
-    val pv = Triangles.perVertexFrom(
-      Triangles.listing(Triangles.orientByDegree(web.edges)),
+    val pv = Triangles.perVertex(triFrames(web.edges)._3,
       GraphOps.vertices(web.edges))
     val total = pv.agg(sum("triangles")).first().getLong(0)
     assert(total == 3 * TestOracles.triangles(edgeArray))
@@ -483,26 +488,30 @@ class GraphAlgoSpec extends AnyFunSuite {
       "cross-check") {
     // K5 ∪ path 10-11-12: cliques live only in the K5 block
     val k5 = for (a <- 0L to 4L; b <- (a + 1) to 4L) yield (a, b)
-    val g = df(k5 ++ Seq((10L, 11L), (11L, 12L)))
-    assert(Mining.kcliqueCount(g, 2) == 12)  // 10 K5 edges + 2 path edges
-    assert(Mining.kcliqueCount(g, 3) == 10)  // C(5,3)
-    assert(Mining.kcliqueCount(g, 4) == 5)   // C(5,4)
-    assert(Mining.kcliqueCount(g, 5) == 1)
-    assert(Mining.kcliqueCount(g, 6) == 0)
-    // k=3 must equal triangle counting on the fixture web graph
-    assert(Mining.kcliqueCount(web.edges, 3) == Triangles.count(web.edges))
+    val (o, ol, _) = triFrames(df(k5 ++ Seq((10L, 11L), (11L, 12L))))
+    assert(Mining.kcliqueCount(o, 2, ol) == 12) // 10 K5 edges + 2 path edges
+    assert(Mining.kcliqueCount(o, 3, ol) == 10) // C(5,3)
+    assert(Mining.kcliqueCount(o, 4, ol) == 5)  // C(5,4)
+    assert(Mining.kcliqueCount(o, 5, ol) == 1)
+    assert(Mining.kcliqueCount(o, 6, ol) == 0)
+    // k=3 must equal the brute-force triangle count of the fixture
+    val (wo, wol, _) = triFrames(web.edges)
+    assert(Mining.kcliqueCount(wo, 3, wol) ==
+      TestOracles.triangles(edgeArray))
     // the merge-intersect counting kernel agrees with the join-cascade
     // LISTING kernel on the fixture (two independent formulations)
-    assert(Mining.kcliqueCount(web.edges, 4) ==
+    assert(Mining.kcliqueCount(wo, 4, wol) ==
       Mining.kcliques(web.edges, 4).count())
   }
 
   test("3-motif census: closed forms on K5 and a path") {
+    def motif3(e: org.apache.spark.sql.DataFrame) = Mining.motif3(
+      Triangles.symDegrees(GraphOps.symmetrize(e)), triFrames(e)._3.count())
     val k5 = for (a <- 0L to 4L; b <- (a + 1) to 4L) yield (a, b)
-    val r1 = Mining.motif3(df(k5), Triangles.count(df(k5))).collect()(0)
+    val r1 = motif3(df(k5)).collect()(0)
     assert((r1.getLong(0), r1.getLong(1), r1.getLong(2)) == ((30L, 10L, 0L)))
     val p3 = df(Seq((0L, 1L), (1L, 2L), (2L, 3L)))
-    val r2 = Mining.motif3(p3, Triangles.count(p3)).collect()(0)
+    val r2 = motif3(p3).collect()(0)
     assert((r2.getLong(0), r2.getLong(1), r2.getLong(2)) == ((2L, 0L, 2L)))
   }
 
@@ -512,19 +521,20 @@ class GraphAlgoSpec extends AnyFunSuite {
     // after the pendant and cross-checks)
     val e = df(Seq((1L, 2L), (2L, 3L), (1L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L)))
-    val (t3, r3) = KTruss.run(e, k = 3)
+    val (o, _, tris) = triFrames(e)
+    val (t3, r3) = KTruss.run(o, tris, k = 3)
     assert(r3 == 2)
     val got3 = t3.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got3 == Set((1L, 2L), (2L, 3L), (1L, 3L), (2L, 4L), (3L, 4L)))
-    val (t4, r4) = KTruss.run(e, k = 4)
+    val (t4, r4) = KTruss.run(o, tris, k = 4)
     assert(t4.isEmpty)
     assert(r4 == 3)
-    assert(KTruss.run(e, 3, 5)._1.collect()
+    assert(KTruss.run(o, tris, 3, 5)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == got3)
     // k <= 2: sup >= k-2 holds at support 0, so the 2-truss is the WHOLE
     // graph — zero-support edges (the pendant) must survive the peel
     val all = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (t2, r2) = KTruss.run(e, k = 2)
+    val (t2, r2) = KTruss.run(o, tris, k = 2)
     assert(r2 == 1)
     assert(t2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == all)
   }
@@ -603,7 +613,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     // 1 --4--> 2, 1 --1--> 3, 3 --1--> 2, 2 --10--> 4, 3 --7--> 4, 4 --1--> 5
     val we = Seq((1L, 2L, 4L), (1L, 3L, 1L), (3L, 2L, 1L), (2L, 4L, 10L),
       (3L, 4L, 7L), (4L, 5L, 1L)).toDF("src", "dst", "w")
-    val adj = Adjacency.buildWeighted(we)
+    val adj = Adjacency.build(we)
     val expect = Map(1L -> 0L, 3L -> 1L, 2L -> 2L, 4L -> 8L, 5L -> 9L)
     // fixedRounds reads the blocks' ws arrays, not the synthetic weights
     assert(labelMap(Sssp.fixedRounds(adj, 1L, 6)) == expect)
@@ -652,7 +662,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     import TestSpark.spark.implicits._
     val we = Seq((1L, 2L, 4L), (1L, 3L, 1L), (3L, 2L, 1L), (2L, 4L, 10L))
       .toDF("src", "dst", "w")
-    val adj = Adjacency.buildWeighted(we)
+    val adj = Adjacency.build(we)
     Adjacency.save(adj, "target/wadj-spec")
     val back = Adjacency.load(spark, "target/wadj-spec")
     val distA = labelMap(Sssp.fixedRounds(adj, 1L, 4))
@@ -764,8 +774,9 @@ class GraphAlgoSpec extends AnyFunSuite {
     // closed forms first: K5 has 15 four-cycles (3 per 4-subset) and 30
     // edge-sharing triangle pairs (t_e = 3 per edge, C(3,2)·10)
     val k5 = df(for (a <- 0L to 4L; b <- (a + 1) to 4L) yield (a, b))
-    assert(Mining.cycle4Count(k5) == 15L)
-    assert(Mining.diamondCount(k5) == 30L)
+    val (k5Sym, k5Deg) = symDeg(k5)
+    assert(Mining.cycle4Count(k5Sym, k5Deg) == 15L)
+    assert(Mining.diamondCount(triFrames(k5)._3) == 30L)
     // brute-force induced census over all C(36,4) vertex subsets
     var (path4, star4, cyc4, paw, dia, k4) = (0L, 0L, 0L, 0L, 0L, 0L)
     val vs = (0L until 36L).toArray
@@ -787,10 +798,12 @@ class GraphAlgoSpec extends AnyFunSuite {
       }
     }
     val g = df(bruteEdges)
-    val row = Mining.motif4(g, Triangles.count(g),
-      Mining.kcliqueCount(g, 4), Mining.cycle4Count(g),
-      Mining.diamondCount(g), Triangles.perVertexFrom(
-        Triangles.listing(Triangles.orientByDegree(g)), GraphOps.vertices(g)))
+    val (sym, deg) = symDeg(g)
+    val (o, ol, tris) = triFrames(g)
+    val row = Mining.motif4(sym, deg, tris.count(),
+      Mining.kcliqueCount(o, 4, ol), Mining.cycle4Count(sym, deg),
+      Mining.diamondCount(tris),
+      Triangles.perVertex(tris, GraphOps.vertices(g)))
       .collect()(0)
     assert((row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3),
       row.getLong(4), row.getLong(5)) == ((path4, star4, cyc4, paw, dia, k4)),
@@ -816,7 +829,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     }
     val bruteTri = triDoms.groupBy(_._1._1).view
       .mapValues(doms => doms.values.map(_.size.toLong).min).toMap
-    val gotTri = Mining.fsm3Triangle(df(bruteEdges), 1L).collect()
+    val gotTri = Mining.fsm3Triangle(triFrames(df(bruteEdges))._3, 1L)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
       .toMap
     assert(gotTri == bruteTri)
@@ -839,7 +853,8 @@ class GraphAlgoSpec extends AnyFunSuite {
     }
     val brutePath = slotSets.view
       .mapValues(_.map(_.size.toLong).min).toMap
-    val gotPath = Mining.fsm3Path(df(bruteEdges), 1L).collect()
+    val gotPath = Mining.fsm3Path(symDeg(df(bruteEdges))._1,
+      triFrames(df(bruteEdges))._3, 1L).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)) -> r.getLong(4)).toMap
     assert(gotPath == brutePath)

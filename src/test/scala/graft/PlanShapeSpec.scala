@@ -90,10 +90,9 @@ class PlanShapeSpec extends AnyFunSuite {
             "graft.exec (Materialize, Par or Memo)")
       }
     }
-    // nothing is tied to one checkout (the bench's frozen artifact path
-    // in Bench.scala is the one exception); tests run from its root
+    // nothing is tied to one checkout; tests run from its root
     val checkout = java.nio.file.Paths.get("").toAbsolutePath.toString + "/"
-    for (f <- mainSources if f.getFileName.toString != "Bench.scala")
+    for (f <- mainSources)
       assert(!read(f).contains(checkout),
         s"$f hard-codes the absolute checkout path $checkout")
   }

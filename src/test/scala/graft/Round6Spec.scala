@@ -59,7 +59,7 @@ class Round6Spec extends AnyFunSuite {
     }
     val sym = GraphOps.symmetrize(df(randEdges)).localCheckpoint(true)
     val deg = Triangles.symDegrees(sym).localCheckpoint(true)
-    assert(Mining.cycle4CountFrom(sym, deg) == twice / 2)
+    assert(Mining.cycle4Count(sym, deg) == twice / 2)
   }
 
   test("triangle listing via out-list intersection == wedge self-join") {
@@ -73,11 +73,12 @@ class Round6Spec extends AnyFunSuite {
   }
 
   test("kclique over a shared orientation + out-lists == generic path") {
+    // the candidate-set counting kernel against the join-cascade listing
     val o = Triangles.orientByDegree(df(randEdges)).localCheckpoint(true)
     val ol = Mining.outLists(o).localCheckpoint(true)
-    assert(Mining.kcliqueCountOriented(o, 4, Some(ol)) ==
-      Mining.kcliqueCount(df(randEdges), 4))
-    assert(Mining.kcliqueCountOriented(o, 5, Some(ol)) ==
-      Mining.kcliqueCount(df(randEdges), 5))
+    assert(Mining.kcliqueCount(o, 4, ol) ==
+      Mining.kcliques(df(randEdges), 4).count())
+    assert(Mining.kcliqueCount(o, 5, ol) ==
+      Mining.kcliques(df(randEdges), 5).count())
   }
 }

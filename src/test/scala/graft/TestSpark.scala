@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Adjacency, GraphOps}
+import graft.exec.Materialize
+import graft.operators.{Adjacency, GraphOps, Mining, Triangles}
 import graft.sources.{Pages, WebGraph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,6 +48,21 @@ object TestSpark {
   lazy val symEdgeArray: Array[(Long, Long)] = {
     val s = edgeArray.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
     s
+  }
+
+  /** The mining tier's triangle frames over an edge table: the degree
+    * orientation, its sorted out-lists and the live triangle listing
+    * (`Triangles.listingFrom`), each as the driver feeds them. */
+  def triFrames(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val o = Materialize(Triangles.orientByDegree(edges))
+    val olist = Materialize(Mining.outLists(o))
+    (o, olist, Triangles.listingFrom(o, olist))
+  }
+
+  /** The cleaned symmetric edge set of `edges` and its degree table. */
+  def symDeg(edges: DataFrame): (DataFrame, DataFrame) = {
+    val sym = Materialize(GraphOps.symmetrize(GraphOps.clean(edges)))
+    (sym, Materialize(Triangles.symDegrees(sym)))
   }
 
   def df(edges: Seq[(Long, Long)]): DataFrame = {
